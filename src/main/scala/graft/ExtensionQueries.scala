@@ -70,7 +70,7 @@ object ExtensionQueries {
     (Ann.assignByLiteral(emb, col("embedding"), centsLocal), cents)
   }
 
-  /** Content fingerprint of a data dir's embeddings source (file sizes +
+  /** Content fingerprint of one source table of a data dir (file sizes +
     * mtimes, non-recursive — parquet dirs hold their part files at one
     * level): the deterministic cross-JVM index paths below must
     * INVALIDATE when the driver regenerates testdata in place between
@@ -80,8 +80,6 @@ object ExtensionQueries {
     * fast on a missing or unlistable source: a silent empty fingerprint
     * would mint a deterministic-looking cache path whose build then dies
     * later with a far more confusing error (ADVICE round 7). */
-  private def embFingerprint(d: String): String =
-    srcFingerprint(d, "embeddings.parquet")
   private def srcFingerprint(d: String, src: String): String = {
     val root = new java.io.File(s"${d.stripSuffix("/")}/$src")
     require(root.exists,
@@ -98,7 +96,7 @@ object ExtensionQueries {
 
   /** Deterministic cross-JVM persisted-artifact directory under the
     * JVM temp dir, shared by every persisted index tier. The path is
-    * content-FINGERPRINTED ([[embFingerprint]], format-versioned via the
+    * content-FINGERPRINTED ([[srcFingerprint]], format-versioned via the
     * prefix): session churn reuses one directory per data GENERATION
     * instead of accumulating a temp dir per (session, dir), and an
     * in-place testdata regeneration changes the fingerprint and so the
@@ -1266,8 +1264,8 @@ object ExtensionQueries {
 
     // ---- Z-order (Morton) layout key: interleaved bits of two bucketed
     // dimensions — the multi-dimensional sort key under Delta/Iceberg
-    // ZORDER BY. Pure codegen'd bit arithmetic, shuffle-free; the write
-    // path is ZOrder.writeZOrdered. Integer-exact ⇒ hash-oracled.
+    // ZORDER BY. Pure codegen'd bit arithmetic, shuffle-free; a layout
+    // write sorts by it. Integer-exact ⇒ hash-oracled.
     "q_zorder" -> ((s, d) => {
       val x = pmod(col("o_custkey"), lit(256))
       val y = pmod(col("o_orderkey"), lit(256))

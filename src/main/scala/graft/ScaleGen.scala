@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Deterministic scale-up generator (round-6 VERDICT item 8: "push oracle
@@ -78,17 +78,10 @@ object ScaleGen {
     val src = args(0)
     val out = args(1)
     val copies = if (args.length > 2) args(2).toInt else 10
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      // the local-mode heartbeat guard (see SparkSuite for the rationale)
-      .config("spark.network.timeout", "600s")
-      .config("spark.executor.heartbeatInterval", "60s")
-      // keep the source tables' TIMESTAMP(MICROS) physical type — INT96
-      // would change what DuckDB reads back
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(32)
+    // keep the source tables' TIMESTAMP(MICROS) physical type — INT96
+    // would change what DuckDB reads back
+    spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
     new java.io.File(out).mkdirs()
 
     // strides from the SOURCE data (max+1 per key), not hard-coded row

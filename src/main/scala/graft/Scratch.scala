@@ -1,1660 +1,53 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
-
-import graft.operators.{Ann, Knn}
-
-/** Scratch profiling main — not part of the driver contract.
+/** Plan-audit and timing tools over the driver contract — not part of it.
   *
-  * Current focus: IVF at scale. 200k × 64-dim clustered synthetic
-  * vectors (64 true clusters): k-means index build (train + assign +
-  * partitioned write), then single-query ivfTopK vs brute-force knnExact
-  * over the written index, then batch knnJoinIvf vs broadcast knnJoin.
-  * Numbers recorded in BASELINE.md.
-  */
+  *  - `runMain graft.Scratch explain <key> [key ...] [--sf <dir>]` prints
+  *    the formatted physical plan of each `SparkEntry.queries` key
+  *    (default sf0.01).
+  *  - `runMain graft.Scratch time <key> [key ...] [--reps N] [--sf <dir>]`
+  *    prints warm per-key wall times via the noop sink: one warmup pass,
+  *    then N timed passes in ONE session — the Bench methodology for a
+  *    single key, without paying a full-inventory run (default sf0.1, 3
+  *    reps).
+  *
+  * Both run on the driver session ([[Sessions.local]]), so they show and
+  * time the plan Bench runs. The one-off soak and probe sections that
+  * used to live here are in git history; their numbers are recorded in
+  * BASELINE.md. */
 object Scratch {
-  def time[T](label: String)(f: => T): T = {
-    val t0 = System.nanoTime(); val r = f
-    println(f"[scratch] $label%-34s ${(System.nanoTime() - t0) / 1e9}%8.2f s")
-    r
-  }
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // local mode has no executor liveness to protect: a host stall or
-      // full-GC pause past the 120 s default makes HeartbeatReceiver
-      // remove the DRIVER executor, which strands every in-flight AQE
-      // stage (observed killing a full test run mid-suite after a 156 s
-      // stall). Generous timeouts are strictly better here.
-      .config("spark.network.timeout", "600s")
-      .config("spark.executor.heartbeatInterval", "60s")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    def noop(df: org.apache.spark.sql.DataFrame): Unit =
-      df.write.format("noop").mode("overwrite").save()
-    // optional section filter: `runMain graft.Scratch zorder` runs only
-    // the z-order layout section (the ANN/PQ sections cost minutes)
-    val only = args.headOption
-
-    if (only.forall(_ == "ann")) runAnn(spark, noop)
-    if (only.forall(_ == "zorder")) runZOrder(spark)
-    if (only.contains("zorder3")) runZOrder3(spark)
-    if (only.forall(_ == "bloom")) runBloom(spark, noop)
-    if (only.forall(_ == "simjoin")) runSimJoin(spark, noop)
-    if (only.forall(_ == "graphlayers")) runGraphLayers(spark, noop)
-    if (only.contains("annmatrix")) runAnnMatrix(spark)
-    if (only.forall(_ == "encode")) runEncode(spark, noop)
-    if (only.contains("bandbench")) runBandBench(spark, noop)
-    if (only.contains("graphsoak")) runGraphSoak(spark, noop)
-    if (only.contains("frontier")) runFrontier(spark)
-    if (only.contains("streamsoak")) runStreamSoak(spark)
-    if (only.contains("ivfserve")) runIvfServe(spark)
-    if (only.contains("ivfsoak")) runIvfSoak(spark)
-    // `runMain graft.Scratch explain <key> [key ...] [--sf <dir>]` —
-    // formatted physical plan of any SparkEntry query (plan-audit loop)
-    if (only.contains("explain")) runExplain(spark, args.drop(1))
-    if (only.contains("spanprobe")) runSpanProbe(spark)
-    if (only.contains("gopherprobe")) runGopherProbe(spark, noop)
-    if (only.contains("time")) runTime(spark, args.drop(1), noop)
-    if (only.contains("hostcap")) runHostCap(spark, noop)
-    if (only.contains("graph256")) runGraph256(spark)
-    // `runMain graft.Scratch graphlru` — resident serving under a
-    // ResidentCache byte cap of half the index (r13 verdict item 2)
-    if (only.contains("graphlru")) runGraphLru(spark)
-    // `runMain graft.Scratch graphshards [nShards ...]` — serve cost at
-    // cluster shard counts, grouped vs one-task-per-shard
-    if (only.contains("graphshards"))
-      runGraphShards(spark,
-        args.drop(1).map(_.toInt).toSeq match {
-          case Nil => Seq(1024, 4096); case s => s
-        })
-    // `runMain graft.Scratch unigramscale [--sf dir] [--nmulti N]
-    //  [--keep N] [--em N]` — unigram-LM train/encode at realistic
-    // vocab scale (round-12 verdict item 5)
-    if (only.contains("unigramscale")) runUnigramScale(spark, args.drop(1))
-    // `runMain graft.Scratch wordpiecescale [--sf dir] [--vocab N]` —
-    // WordPiece encode at the reference tokenizer's real vocabulary
-    // size (all-MiniLM-L6-v2 = BERT WordPiece, 30,522 entries;
-    // round-13 verdict item 1)
-    if (only.contains("wordpiecescale"))
-      runWordpieceScale(spark, args.drop(1))
-    // `runMain graft.Scratch graphupserts [shards]` — streaming upsert
-    // batches interleaved with grouped serves at cluster shard counts
-    // (round-12 verdict item 8's measurement row)
-    if (only.contains("graphupserts"))
-      runGraphUpserts(spark, args.drop(1).headOption.map(_.toInt)
-        .getOrElse(1024))
-    // `runMain graft.Scratch knscale [--sf dir] [--batches N]` —
-    // streaming Kneser-Ney maintenance at corpus scale: per-batch
-    // partial walls, merge-on-read + serving walls, compaction
-    if (only.contains("knscale")) runKnScale(spark, args.drop(1))
-    // `runMain graft.Scratch bm25scale [--sf dir] [--batches N]` —
-    // streaming BM25 statistics maintenance + MaxScore pruning at
-    // corpus scale
-    if (only.contains("bm25scale")) runBm25Scale(spark, args.drop(1))
-    spark.stop()
-  }
-
-  /** Streaming Kneser-Ney maintenance at corpus scale: the sf1 corpus
-    * streamed through [[graft.streaming.Streams.knStream]] in N
-    * micro-batches (per-batch bigram-count partials), then
-    * merge-on-read, serving a candidate corpus under the streamed
-    * statistics, and compaction. Records the cost story StreamsSpec's
-    * small-fixture proof can't: partial walls at real batch sizes and
-    * whether merge-on-read stays serving-cheap as partials accumulate. */
-  private def runKnScale(spark: SparkSession, args: Array[String]): Unit = {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import graft.streaming.Streams
-    import graft.operators.LmScore
-    import spark.implicits._
-    val opts = args.sliding(2).collect {
+    val mode = args.headOption.getOrElse("")
+    require(mode == "explain" || mode == "time",
+      "usage: graft.Scratch explain|time <key> [key ...] [--sf <dir>] [--reps N]")
+    val rest = args.drop(1)
+    val opts = rest.sliding(2).collect {
       case Array(k, v) if k.startsWith("--") => k -> v }.toMap
-    val dir = opts.getOrElse("--sf", "/tmp/graft-sf1")
-    val nb = opts.getOrElse("--batches", "10").toInt
-    val base = java.nio.file.Files
-      .createTempDirectory("graft-knscale-").toString
-    val rows = Tables.documents(spark, dir)
-      .select(col("doc_id"), col("text")).as[(Long, String)].collect()
-    println(s"[scratch] knscale corpus = ${rows.length} docs " +
-      s"in $nb batches ($dir)")
-    val input = MemoryStream[(Long, String)](spark)
-    val q = Streams.knStream(spark, input.toDF().toDF("doc_id", "text"),
-      s"$base/stats", s"$base/chk")
-    val per = scala.collection.mutable.ArrayBuffer.empty[Double]
-    try {
-      rows.grouped(math.max(1, (rows.length + nb - 1) / nb)).foreach { b =>
-        val t0 = System.nanoTime()
-        input.addData(b.toSeq); q.processAllAvailable()
-        per += (System.nanoTime() - t0) / 1e9
+    val keys = SparkEntry.checkKeys(rest.takeWhile(!_.startsWith("--")).toSeq)
+    val reps = opts.getOrElse("--reps", "3").toInt
+    require(reps >= 1, s"--reps must be >= 1, got $reps")
+    val spark = Sessions.local(32)
+    if (mode == "explain") {
+      val dir = opts.getOrElse("--sf", "/root/testdata/sf0.01")
+      keys.foreach { k =>
+        println(s"==== $k @ $dir ====")
+        SparkEntry.queries(k)(spark, dir).explain("formatted")
       }
-    } finally q.stop()
-    def med(xs: Seq[Double]) = xs.sorted.apply(xs.length / 2)
-    println(f"[scratch] knscale ingest: ${per.length} batches, " +
-      f"first ${per.head}%.2f s, median ${med(per.toSeq)}%.2f s, " +
-      f"last ${per.last}%.2f s, total ${per.sum}%.2f s")
-    var t0 = System.nanoTime()
-    val types = Streams.readKnBigrams(spark, s"$base/stats").count()
-    println(f"[scratch] knscale merge-on-read: $types bigram types " +
-      f"in ${(System.nanoTime() - t0) / 1e9}%.2f s")
-    // serving: score a candidate corpus under the streamed statistics
-    // (--cand overrides; defaults to the --sf corpus so the harness
-    // runs on any host without a fixed testdata layout)
-    val candDir = opts.getOrElse("--cand", dir)
-    val cand = Tables.documents(spark, candDir)
-    t0 = System.nanoTime()
-    LmScore.lmScoreKnWith(cand, col("doc_id"), col("text"),
-        Streams.readKnBigrams(spark, s"$base/stats"))
-      .write.format("noop").mode("overwrite").save()
-    println(f"[scratch] knscale serve ($candDir candidates): " +
-      f"${(System.nanoTime() - t0) / 1e9}%.2f s")
-    t0 = System.nanoTime()
-    Streams.compactKn(spark, s"$base/stats")
-    val compactWall = (System.nanoTime() - t0) / 1e9
-    t0 = System.nanoTime()
-    val types2 = Streams.readKnBigrams(spark, s"$base/stats").count()
-    println(f"[scratch] knscale compact: $compactWall%.2f s, " +
-      f"post-compact read $types2 types " +
-      f"in ${(System.nanoTime() - t0) / 1e9}%.2f s")
-    require(types == types2, s"compaction changed the type count: " +
-      s"$types -> $types2")
-  }
-
-  /** Streaming BM25 statistics maintenance at corpus scale — the
-    * [[runKnScale]] harness for the full-text leg: the corpus streamed
-    * through [[graft.streaming.Streams.bm25Stream]] in N micro-batches
-    * (vocabulary-sized df/length/count partials), then merge-on-read,
-    * serving candidates under the streamed statistics
-    * ([[graft.operators.Bm25.scoresWith]]), the MaxScore-pruned top-k
-    * beside the exhaustive ranking on the same corpus, and
-    * compaction. */
-  private def runBm25Scale(spark: SparkSession,
-      args: Array[String]): Unit = {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import graft.streaming.Streams
-    import graft.operators.Bm25
-    import spark.implicits._
-    val opts = args.sliding(2).collect {
-      case Array(k, v) if k.startsWith("--") => k -> v }.toMap
-    val dir = opts.getOrElse("--sf", "/tmp/graft-sf1")
-    val nb = opts.getOrElse("--batches", "10").toInt
-    val kws = Seq("join", "filter", "window", "scan")
-    val base = java.nio.file.Files
-      .createTempDirectory("graft-bm25scale-").toString
-    val rows = Tables.documents(spark, dir)
-      .select(col("doc_id"), col("text")).as[(Long, String)].collect()
-    println(s"[scratch] bm25scale corpus = ${rows.length} docs " +
-      s"in $nb batches ($dir)")
-    val input = MemoryStream[(Long, String)](spark)
-    val q = Streams.bm25Stream(spark, input.toDF().toDF("doc_id", "text"),
-      s"$base/stats", s"$base/chk")
-    val per = scala.collection.mutable.ArrayBuffer.empty[Double]
-    try {
-      rows.grouped(math.max(1, (rows.length + nb - 1) / nb)).foreach { b =>
-        val t0 = System.nanoTime()
-        input.addData(b.toSeq); q.processAllAvailable()
-        per += (System.nanoTime() - t0) / 1e9
-      }
-    } finally q.stop()
-    def med(xs: Seq[Double]) = xs.sorted.apply(xs.length / 2)
-    println(f"[scratch] bm25scale ingest: ${per.length} batches, " +
-      f"first ${per.head}%.2f s, median ${med(per.toSeq)}%.2f s, " +
-      f"last ${per.last}%.2f s, total ${per.sum}%.2f s")
-    var t0 = System.nanoTime()
-    val (dfreq, st) = Streams.readBm25Stats(spark, s"$base/stats")
-    val vocab = dfreq.count()
-    println(f"[scratch] bm25scale merge-on-read: $vocab term types " +
-      f"in ${(System.nanoTime() - t0) / 1e9}%.2f s")
-    val candDir = opts.getOrElse("--cand", dir)
-    val cand = Tables.documents(spark, candDir)
-    t0 = System.nanoTime()
-    Bm25.scoresWith(cand, col("doc_id"), col("text"), kws,
-        dfreq, st)
-      .write.format("noop").mode("overwrite").save()
-    println(f"[scratch] bm25scale serve ($candDir candidates): " +
-      f"${(System.nanoTime() - t0) / 1e9}%.2f s")
-    // MaxScore pruning vs exhaustive on the full corpus (batch form —
-    // the q_bm25_maxscore vs q_bm25_rank physics at scale), with the
-    // survivor fraction the pruning bought
-    val docs = Tables.documents(spark, dir)
-    val n = docs.count()
-    t0 = System.nanoTime()
-    Bm25.scores(docs, col("doc_id"), col("text"), kws, n)
-      .orderBy(col("score").desc, col("doc_id").asc).limit(15)
-      .write.format("noop").mode("overwrite").save()
-    val exhaustiveWall = (System.nanoTime() - t0) / 1e9
-    t0 = System.nanoTime()
-    val (ubDoc, surv, topk) = Bm25.maxScoreParts(docs, col("doc_id"),
-      col("text"), kws, n, 15)
-    topk.write.format("noop").mode("overwrite").save()
-    val maxscoreWall = (System.nanoTime() - t0) / 1e9
-    println(f"[scratch] bm25scale top-15: exhaustive $exhaustiveWall%.2f s, " +
-      f"maxscore $maxscoreWall%.2f s, " +
-      f"survivors ${surv.count()} of ${ubDoc.count()} matched")
-    t0 = System.nanoTime()
-    Streams.compactBm25(spark, s"$base/stats")
-    val compactWall = (System.nanoTime() - t0) / 1e9
-    t0 = System.nanoTime()
-    val vocab2 = Streams.readBm25Stats(spark, s"$base/stats")._1.count()
-    println(f"[scratch] bm25scale compact: $compactWall%.2f s, " +
-      f"post-compact read $vocab2 types " +
-      f"in ${(System.nanoTime() - t0) / 1e9}%.2f s")
-    require(vocab == vocab2, s"compaction changed the type count: " +
-      s"$vocab -> $vocab2")
-  }
-
-  /** Unigram-LM at realistic vocabulary scale (round-12 verdict item 5):
-    * the declared key trains ~100 units for oracle replayability; a real
-    * SentencePiece vocab is 1k–32k. Same code path
-    * ([[graft.operators.UnigramLm]]) with nMulti/keepMulti/emRounds
-    * scaled up — measures the train wall (corpus-touched-once + EM
-    * rounds of vocabulary-sized jobs) and the encode wall (distinct-word
-    * Viterbi under a |vocab|-entry [[graft.plans.VocabScore]] hash map +
-    * one corpus join). */
-  private def runUnigramScale(spark: SparkSession,
-      args: Array[String]): Unit = {
-    import graft.operators.UnigramLm
-    val opts = args.sliding(2).collect {
-      case Array(k, v) if k.startsWith("--") => k -> v }.toMap
-    val dir = opts.getOrElse("--sf", "/tmp/graft-sf1")
-    val nMulti = opts.getOrElse("--nmulti", "1500").toInt
-    val keep = opts.getOrElse("--keep", "1000").toInt
-    val em = opts.getOrElse("--em", "3").toInt
-    // the synthetic documents text has ~31 distinct words — far too few
-    // 2–4-char substrings to seed a 1k-unit vocabulary. Salt each doc
-    // with two deterministic 16-char md5-hex words: the hex alphabet
-    // yields ~70k candidate units and ~2 distinct words PER DOC, so the
-    // distinct-word Viterbi table reaches corpus scale (~100k words at
-    // sf1) — the shape a real crawl corpus gives this operator.
-    val docs = Tables.documents(spark, dir)
-      .select(col("doc_id"), concat_ws(" ", col("text"),
-        substring(md5(col("doc_id").cast("string")), 1, 16),
-        substring(md5(col("doc_id").cast("string")), 17, 16)).as("text"))
-    println(s"[scratch] unigramscale corpus = ${docs.count()} docs ($dir)")
-    val vocab = time(s"unigram train nMulti=$nMulti keep=$keep em=$em") {
-      UnigramLm.trainUnigram(docs, col("text"), nMulti = nMulti,
-        keepMulti = keep, emRounds = em)
-    }
-    println(s"[scratch] trained vocab = ${vocab.size} units " +
-      s"(${vocab.count(_._1.length >= 2)} multi-char)")
-    val totals = time(s"unigram encode vocab=${vocab.size}") {
-      UnigramLm.unigramTokens(docs, col("doc_id"), col("text"), vocab)
-        .agg(sum("n_ug_tokens").as("tok"), sum("n_words").as("w"))
-        .collect()(0)
-    }
-    println(s"[scratch] encode totals: tokens=${totals.get(0)} " +
-      s"words=${totals.get(1)}")
-  }
-
-  /** WordPiece encode at realistic vocabulary scale (round-13 verdict
-    * item 1, the one `weak`): the declared key encodes under a small
-    * BPE-derived vocab for oracle replayability; the reference's actual
-    * tokenizer (all-MiniLM-L6-v2 = BERT WordPiece) carries 30,522
-    * entries, where the pre-round-14 `array_contains` membership was
-    * ~|vocab|×16×16 ≈ 10⁶ string comparisons per distinct word. Same
-    * code path ([[graft.operators.BpeStats.wordpieceTokens]], now a
-    * [[graft.plans.VocabScore]] O(1) hash lookup) with the vocabulary
-    * padded to BERT size: the char-level base (wordpieceVocab under
-    * zero merges — every corpus word stays encodable, so the greedy
-    * loop runs its full 16×16 band instead of short-circuiting to
-    * [UNK]) plus deterministic multi-char hex units (bare + '##'
-    * continuation forms) that give the md5-salt words (unigramscale
-    * recipe) real longest-match work. */
-  private def runWordpieceScale(spark: SparkSession,
-      args: Array[String]): Unit = {
-    import graft.operators.BpeStats
-    val opts = args.sliding(2).collect {
-      case Array(k, v) if k.startsWith("--") => k -> v }.toMap
-    val dir = opts.getOrElse("--sf", "/tmp/graft-sf1")
-    val target = opts.getOrElse("--vocab", "30522").toInt
-    val docs = Tables.documents(spark, dir)
-      .select(col("doc_id"), concat_ws(" ", col("text"),
-        substring(md5(col("doc_id").cast("string")), 1, 16),
-        substring(md5(col("doc_id").cast("string")), 17, 16)).as("text"))
-    println(s"[scratch] wordpiecescale corpus = ${docs.count()} docs ($dir)")
-    val base = time("wordpiecescale char-level base vocab") {
-      BpeStats.wordpieceVocab(docs, col("text"), Nil)
-    }
-    val hex = "0123456789abcdef"
-    val pad = Iterator.from(2).flatMap { len =>
-      def units(prefix: String, l: Int): Iterator[String] =
-        if (l == 0) Iterator(prefix)
-        else hex.iterator.flatMap(c => units(prefix + c, l - 1))
-      units("", len).flatMap(u => Iterator(u, "##" + u))
-    }
-    val vocab = (base ++ pad.filterNot(base.contains)
-      .take(math.max(0, target - base.size))).sorted
-    println(s"[scratch] vocab = ${vocab.size} units " +
-      s"(${base.size} char-level base + ${vocab.size - base.size} hex pad)")
-    val totals = time(s"wordpiece encode vocab=${vocab.size}") {
-      BpeStats.wordpieceTokens(docs, col("doc_id"), col("text"), vocab)
-        .agg(sum("n_wp_tokens").as("tok"), sum("n_unk_words").as("unk"),
-          sum("n_words").as("w"))
-        .collect()(0)
-    }
-    println(s"[scratch] encode totals: tokens=${totals.get(0)} " +
-      s"unk_words=${totals.get(1)} words=${totals.get(2)}")
-  }
-
-  /** Streaming graph upserts INTERLEAVED with grouped serving at cluster
-    * shard counts (round-12 verdict item 8's measurement): build a
-    * 1M × 64 index at `shards` dirs, reach warm grouped steady state,
-    * run one [[graft.streaming.Streams.graphUpsertStream]] micro-batch
-    * of new ids, and measure (a) the batch wall, (b) the FIRST grouped
-    * serve after the swap — fingerprint re-plan + touched-shard reloads
-    * — and (c) the warm steady state after. Untouched shards must serve
-    * from the ResidentCache throughout (the lazy-input contract). */
-  private def runGraphUpserts(spark: SparkSession, shards: Int): Unit = {
-    import graft.operators.{GraphAnn, Knn}
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import spark.implicits._
-    val n = 1000000L; val dim = 64; val nClusters = 256
-    val cores = spark.sparkContext.defaultParallelism
-    val group = math.max(1, shards / (4 * cores))
-    val corpus = spark.range(n).select(col("id").as("vec_id"),
-      transform(sequence(lit(0), lit(dim - 1)), j =>
-        when(j === col("id") % nClusters, lit(10.0)).otherwise(lit(0.0)) +
-          pmod(hash(col("id"), j), lit(1000)).cast("double") / 1000.0)
-        .as("embedding"))
-      .localCheckpoint(eager = true)
-    val base = java.nio.file.Files
-      .createTempDirectory(s"graft-gupserts$shards-").toString
-    val idx = s"$base/idx"
-    val g = time(s"graphupserts build S=$shards (1M x $dim)") {
-      val b = GraphAnn.buildGraph(corpus, col("vec_id"), col("embedding"),
-        numShards = shards, m = 16, efConstruction = 100)
-      b.persist().count(); b
-    }
-    time(s"graphupserts writeGraphIndex ($shards dirs)")(
-      GraphAnn.writeGraphIndex(g, idx))
-    g.unpersist()
-    def serve(i: Int): Double = {
-      val q = Knn.vectorAt(corpus, col("vec_id"), 5000L + i * 97,
-        col("embedding"))
-      val t0 = System.nanoTime()
-      val rows = GraphAnn.graphTopKResident(spark, idx, q, k = 10,
-        ef = 100, shardsPerTask = group).collect()
-      require(rows.length == 10)
-      (System.nanoTime() - t0) / 1e9
-    }
-    serve(0) // cold decode
-    val warm0 = (1 to 5).map(serve).sorted.apply(2)
-    println(f"[scratch] graphupserts S=$shards pre-upsert warm grouped " +
-      f"(g=$group): median-of-5 $warm0%.2f s")
-    val input = MemoryStream[(Long, Seq[Double])](spark)
-    val q = graft.streaming.Streams.graphUpsertStream(spark,
-      input.toDF().toDF("vec_id", "embedding"), idx, s"$base/chk",
-      numShards = shards, m = 16, efConstruction = 100)
-    try {
-      // 100 brand-new ids — the incremental-insert path; ~min(100,
-      // shards) touched dirs swapped, every other shard byte-untouched
-      val adds = (0 until 100).map { i =>
-        val id = n + i
-        (id, (0 until dim).map(j =>
-          (if (j == id % nClusters) 10.0 else 0.0) +
-            (math.abs((id * 31 + j).hashCode) % 1000) / 1000.0))
-      }
-      time(s"graphupserts upsert batch (100 adds into S=$shards)") {
-        input.addData(adds); q.processAllAvailable()
-      }
-      val tFirst = serve(100)
-      println(f"[scratch] graphupserts S=$shards FIRST grouped serve " +
-        f"after swap (re-plan + touched reloads): $tFirst%.2f s")
-      val warm1 = (101 to 105).map(serve).sorted.apply(2)
-      println(f"[scratch] graphupserts S=$shards post-upsert warm grouped " +
-        f"(g=$group): median-of-5 $warm1%.2f s")
-      val total = GraphAnn.readGraphIndex(spark, idx).count()
-      println(s"[scratch] graphupserts final index rows = $total " +
-        s"(expect ${n + 100})")
-      // ---- replacement-heavy worst case (round-13 verdict item 6):
-      // 100 EXISTING ids spread across the id range — every touched
-      // shard takes the deterministic full-rebuild path (~min(100, S)
-      // whole-shard rebuilds vs the incremental-insert batch above)
-      val repl = (0 until 100).map { i =>
-        val id = i * (n / 100)
-        (id, (0 until dim).map(j =>
-          (if (j == id % nClusters) 10.0 else 0.0) +
-            (math.abs((id * 37 + j).hashCode) % 1000) / 1000.0))
-      }
-      time(s"graphupserts REPLACEMENT batch (100 existing ids, " +
-          s"~${math.min(100, shards)} shard rebuilds)") {
-        input.addData(repl); q.processAllAvailable()
-      }
-      val tFirstR = serve(200)
-      println(f"[scratch] graphupserts S=$shards first grouped serve " +
-        f"after replacement swap: $tFirstR%.2f s")
-      val warm2 = (201 to 205).map(serve).sorted.apply(2)
-      println(f"[scratch] graphupserts S=$shards post-replacement warm " +
-        f"grouped (g=$group): median-of-5 $warm2%.2f s")
-    } finally q.stop()
-    // ---- size-triggered split storm (round-13 verdict item 5): a
-    // second stream armed with maxShardRows just under the current
-    // per-shard size — a spread add batch pushes its touched shards
-    // over, so ~touched-many splits fire in ONE batched job per round
-    var splitCount = 0
-    val capRows = (n + 200) / shards // ≈ current per-shard rows − ε
-    val input2 = MemoryStream[(Long, Seq[Double])](spark)
-    val q2 = graft.streaming.Streams.graphUpsertStream(spark,
-      input2.toDF().toDF("vec_id", "embedding"), idx, s"$base/chk2",
-      numShards = shards, m = 16, efConstruction = 100,
-      maxShardRows = capRows,
-      onSplit = (_, s) => splitCount += s.size)
-    try {
-      val adds2 = (0 until 2000).map { i =>
-        val id = n + 1000 + i
-        (id, (0 until dim).map(j =>
-          (if (j == id % nClusters) 10.0 else 0.0) +
-            (math.abs((id * 31 + j).hashCode) % 1000) / 1000.0))
-      }
-      time(s"graphupserts SPLIT storm (2000 adds, cap=$capRows " +
-          s"rows/shard, batched split job per round)") {
-        input2.addData(adds2); q2.processAllAvailable()
-      }
-      println(s"[scratch] graphupserts splits fired = $splitCount " +
-        s"(dirs now ${graft.operators.GraphAnn.listShardDirIds(
-          org.apache.hadoop.fs.FileSystem.get(
-            spark.sparkContext.hadoopConfiguration), idx).size})")
-      serve(300) // first post-split serve (re-plan + reloads)
-      val warm3 = (301 to 305).map(serve).sorted.apply(2)
-      println(f"[scratch] graphupserts post-SPLIT warm grouped " +
-        f"(g=$group): median-of-5 $warm3%.2f s")
-      val total2 = GraphAnn.readGraphIndex(spark, idx).count()
-      // replacements replace in place — only the two add batches grow
-      println(s"[scratch] graphupserts final rows after split storm = " +
-        s"$total2 (expect ${n + 100 + 2000})")
-    } finally q2.stop()
-    // ---- size-triggered sibling MERGE after a bulk delete (round-14
-    // verdict item 7): a third stream armed with minShardRows just
-    // above the pre-split shard size — tombstoning the storm's 2000
-    // adds drops every split pair back under it, so the storm's splits
-    // cascade back in ONE batched rebuild job per round
-    var mergeCount = 0
-    val minRows = capRows + capRows / 10
-    val input3 = MemoryStream[(Long, Seq[Double], Boolean)](spark)
-    val q3 = graft.streaming.Streams.graphUpsertStream(spark,
-      input3.toDF().toDF("vec_id", "embedding", "del"), idx, s"$base/chk3",
-      numShards = shards, m = 16, efConstruction = 100,
-      deleteCol = Some("del"),
-      minShardRows = minRows,
-      onMerge = (_, ms) => mergeCount += ms.size)
-    try {
-      val dels = (0 until 2000).map(i =>
-        (n + 1000 + i, null: Seq[Double], true))
-      time(s"graphupserts MERGE storm (2000 tombstones, " +
-          s"min=$minRows rows/pair)") {
-        input3.addData(dels); q3.processAllAvailable()
-      }
-      println(s"[scratch] graphupserts merges fired = $mergeCount " +
-        s"(dirs now ${graft.operators.GraphAnn.listShardDirIds(
-          org.apache.hadoop.fs.FileSystem.get(
-            spark.sparkContext.hadoopConfiguration), idx).size})")
-      serve(400) // first post-merge serve (re-plan + reloads)
-      val warm4 = (401 to 405).map(serve).sorted.apply(2)
-      println(f"[scratch] graphupserts post-MERGE warm grouped " +
-        f"(g=$group): median-of-5 $warm4%.2f s")
-      val total3 = GraphAnn.readGraphIndex(spark, idx).count()
-      println(s"[scratch] graphupserts final rows after merge storm = " +
-        s"$total3 (expect ${n + 100})")
-    } finally q3.stop()
-  }
-
-  /** 256-shard graph-ANN serve (VERDICT r10 item 7): the merge-bound
-    * measurement — 1M × 64-dim clustered corpus, 256 shards, single-query
-    * serves from the persisted index. Each shard ships only its top-k
-    * and the final merge is TakeOrderedAndProject, so 256 shards cost
-    * 256 beam searches of parallel work, not a driver merge of
-    * ef × 256 rows. */
-  private def runGraph256(spark: SparkSession): Unit = {
-    import graft.operators.{GraphAnn, Knn}
-    val n = 1000000L; val dim = 64; val nClusters = 256; val shards = 256
-    val corpus = spark.range(n).select(col("id").as("vec_id"),
-      transform(sequence(lit(0), lit(dim - 1)), j =>
-        when(j === col("id") % nClusters, lit(10.0)).otherwise(lit(0.0)) +
-          pmod(hash(col("id"), j), lit(1000)).cast("double") / 1000.0)
-        .as("embedding"))
-      .localCheckpoint(eager = true)
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-graph256-").toString
-    val g = time(s"graph build S=$shards m=16 efC=100 (1M x $dim)") {
-      val b = GraphAnn.buildGraph(corpus, col("vec_id"), col("embedding"),
-        numShards = shards, m = 16, efConstruction = 100)
-      b.persist().count(); b
-    }
-    time("writeGraphIndex (256 shard dirs)")(GraphAnn.writeGraphIndex(g, dir))
-    g.unpersist()
-    // serve: indexed path re-reads the store per query (the cold /
-    // one-shot cost); resident path loads shard graphs once per executor
-    // and repeats pay only the beam searches + the k x shards merge
-    def serve(label: String,
-              f: Seq[Double] => org.apache.spark.sql.DataFrame): Unit = {
-      val times = (0 until 10).map { i =>
-        val tq0 = System.nanoTime()
-        val q = Knn.vectorAt(corpus, col("vec_id"), 4242L + i * 97,
-          col("embedding"))
-        val tq = (System.nanoTime() - tq0) / 1e9
-        val t0 = System.nanoTime()
-        val rows = f(q).collect()
-        require(rows.length == 10)
-        val ts = (System.nanoTime() - t0) / 1e9
-        println(f"[scratch]   $label q$i: vectorAt $tq%.2f s, serve $ts%.2f s")
-        (System.nanoTime() - t0) / 1e9
-      }
-      println(f"[scratch] graph256 $label: first ${times.head}%.2f s, " +
-        f"median-of-9-warm ${times.tail.sorted.apply(4)}%.2f s " +
-        f"(k=10 ef=100, $shards shards)")
-    }
-    serve("indexed (re-reads store)", q =>
-      GraphAnn.graphTopKIndexed(spark, dir, q, k = 10, ef = 100))
-    serve("resident (cached shard graphs)", q =>
-      GraphAnn.graphTopKResident(spark, dir, q, k = 10, ef = 100))
-  }
-
-  /** Resident-cache LRU bound under serving load (round-13 verdict item
-    * 2's measurement): 1M × 64 at 256 shards, warm resident serves
-    * uncapped, then with `capBytes` at HALF the decoded index — the
-    * executor-OOM scenario the bound exists for. With the cap, each
-    * serve reloads the evicted half (capped steady state ≈ the decode
-    * cost of cap-missed shards); the bound trades wall for a hard
-    * memory ceiling, and results stay identical (spec-pinned). */
-  private def runGraphLru(spark: SparkSession): Unit = {
-    import graft.operators.{GraphAnn, Knn}
-    val n = 1000000L; val dim = 64; val nClusters = 256; val shards = 256
-    val corpus = spark.range(n).select(col("id").as("vec_id"),
-      transform(sequence(lit(0), lit(dim - 1)), j =>
-        when(j === col("id") % nClusters, lit(10.0)).otherwise(lit(0.0)) +
-          pmod(hash(col("id"), j), lit(1000)).cast("double") / 1000.0)
-        .as("embedding"))
-      .localCheckpoint(eager = true)
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-graphlru-").toString
-    val g = GraphAnn.buildGraph(corpus, col("vec_id"), col("embedding"),
-      numShards = shards, m = 16, efConstruction = 100)
-    g.persist().count()
-    time("graphlru writeGraphIndex")(GraphAnn.writeGraphIndex(g, dir))
-    g.unpersist()
-    def serve(i: Int): Double = {
-      val q = Knn.vectorAt(corpus, col("vec_id"), 4242L + i * 97,
-        col("embedding"))
-      val t0 = System.nanoTime()
-      require(GraphAnn.graphTopKResident(spark, dir, q, k = 10,
-        ef = 100).collect().length == 10)
-      (System.nanoTime() - t0) / 1e9
-    }
-    GraphAnn.ResidentCache.clear()
-    val cap0 = GraphAnn.ResidentCache.capBytes.get()
-    try {
-      val cold = serve(0)
-      val warm = (1 to 5).map(serve).sorted.apply(2)
-      val full = GraphAnn.ResidentCache.residentBytes
-      println(f"[scratch] graphlru S=$shards uncapped: cold $cold%.2f s, " +
-        f"warm median-of-5 $warm%.2f s, resident ${full / 1e6}%.0f MB " +
-        f"(${GraphAnn.ResidentCache.residentEntries} shards)")
-      GraphAnn.ResidentCache.capBytes.set(full / 2)
-      GraphAnn.ResidentCache.clear()
-      val loads0 = GraphAnn.ResidentCache.loads.get()
-      serve(100) // refill under the cap
-      val capped = (101 to 105).map(serve).sorted.apply(2)
-      val reloadsPerServe =
-        (GraphAnn.ResidentCache.loads.get() - loads0) / 6.0
-      println(f"[scratch] graphlru S=$shards cap=half-index: steady " +
-        f"median-of-5 $capped%.2f s, resident " +
-        f"${GraphAnn.ResidentCache.residentBytes / 1e6}%.0f MB " +
-        f"(${GraphAnn.ResidentCache.residentEntries} shards, " +
-        f"$reloadsPerServe%.0f reloads/serve)")
-    } finally {
-      GraphAnn.ResidentCache.capBytes.set(cap0)
-      GraphAnn.ResidentCache.clear()
-    }
-  }
-
-  /** Graph-ANN serve at CLUSTER shard counts (VERDICT r11 item 7): at
-    * 10k+ shards the one-task-per-shard serve is bound by task
-    * scheduling (waves × dispatch), not beam work. Measures warm
-    * resident serves at each shard count with shardsPerTask 1 vs a
-    * grouping that lands near 4×cores tasks, plus the one-time
-    * session-lineage planning cost the shard count drives. */
-  private def runGraphShards(spark: SparkSession, shardCounts: Seq[Int]): Unit = {
-    import graft.operators.{GraphAnn, Knn}
-    val n = 1000000L; val dim = 64; val nClusters = 256
-    val cores = spark.sparkContext.defaultParallelism
-    val corpus = spark.range(n).select(col("id").as("vec_id"),
-      transform(sequence(lit(0), lit(dim - 1)), j =>
-        when(j === col("id") % nClusters, lit(10.0)).otherwise(lit(0.0)) +
-          pmod(hash(col("id"), j), lit(1000)).cast("double") / 1000.0)
-        .as("embedding"))
-      .localCheckpoint(eager = true)
-    shardCounts.foreach { shards =>
-      val dir = java.nio.file.Files
-        .createTempDirectory(s"graft-gshards$shards-").toString
-      val g = time(s"graphshards build S=$shards (1M x $dim)") {
-        val b = GraphAnn.buildGraph(corpus, col("vec_id"),
-          col("embedding"), numShards = shards, m = 16,
-          efConstruction = 100)
-        b.persist().count(); b
-      }
-      time(s"graphshards writeGraphIndex ($shards dirs)")(
-        GraphAnn.writeGraphIndex(g, dir))
-      g.unpersist()
-      // one-time per-session lineage planning, isolated from the cold
-      // decode: one whole-index read sliced by partition pruning
-      // (constant driver jobs in the shard count since round 13)
-      time(s"graphshards $shards-dir lineage planning (pure)")(
-        GraphAnn.readGraphIndexAligned(spark, dir).rdd.getNumPartitions)
-      time(s"graphshards first-serve at $shards (cold decode)")(
-        GraphAnn.graphTopKResident(spark, dir,
-          Knn.vectorAt(corpus, col("vec_id"), 4242L, col("embedding")),
-          k = 10).collect())
-      def warm(label: String, group: Int): Unit = {
-        val times = (0 until 9).map { i =>
-          val q = Knn.vectorAt(corpus, col("vec_id"), 5000L + i * 97,
-            col("embedding"))
+    } else {
+      val dir = opts.getOrElse("--sf", "/root/testdata/sf0.1")
+      def noop(k: String): Unit = SparkEntry.queries(k)(spark, dir)
+        .write.format("noop").mode("overwrite").save()
+      keys.foreach { k =>
+        noop(k) // warmup: codegen, footers, session caches
+        val times = (1 to reps).map { _ =>
           val t0 = System.nanoTime()
-          val rows = GraphAnn.graphTopKResident(spark, dir, q, k = 10,
-            ef = 100, shardsPerTask = group).collect()
-          require(rows.length == 10)
+          noop(k)
           (System.nanoTime() - t0) / 1e9
         }
-        println(f"[scratch] graphshards S=$shards $label: " +
-          f"median-of-9-warm ${times.sorted.apply(4)}%.2f s " +
-          f"(tasks=${(shards + group - 1) / group})")
-      }
-      warm("per-shard (g=1)", 1)
-      val grouped = math.max(1, shards / (4 * cores))
-      warm(s"grouped (g=$grouped)", grouped)
-    }
-  }
-
-  /** Hot-host quota measurement (VERDICT r10 item 4): 4M synthetic rows,
-    * 50% on ONE host, the rest uniform over 100k hosts. Compares the
-    * ranked-window formulation (one reducer owns the hot host's 2M rows)
-    * against the bounded-buffer TopK aggregator (map-side k-trim). */
-  private def runHostCap(spark: SparkSession,
-      noop: org.apache.spark.sql.DataFrame => Unit): Unit = {
-    import org.apache.spark.sql.expressions.Window
-    val n = 32000000L
-    val rows = spark.range(n).select(
-      col("id").as("doc_id"),
-      when(col("id") % 2 === 0, lit("hot.example.com"))
-        .otherwise(concat(lit("h"), pmod(xxhash64(col("id")), lit(100000L)),
-          lit(".example.com"))).as("host"),
-      (pmod(xxhash64(col("id"), lit(7)), lit(1000000L)).cast("double")
-        / 1000000.0).as("quality"))
-      .localCheckpoint(eager = true) // measure the operators, not range()
-    val w = Window.partitionBy(col("host"))
-      .orderBy(col("quality").desc, col("doc_id").asc)
-    def windowForm = rows
-      .withColumn("rn", row_number().over(w)).filter(col("rn") <= 10)
-    def aggForm = graft.operators.TopK.topKPerGroupStr(spark, rows,
-      "host", "doc_id", "quality", k = 10)
-    time("hostcap window warm")(noop(windowForm))
-    time("hostcap window")(noop(windowForm))
-    time("hostcap topk-agg warm")(noop(aggForm))
-    time("hostcap topk-agg")(noop(aggForm))
-    // same quota set (modulo rn types): sanity before believing a number
-    val a = windowForm.select("doc_id").except(
-      aggForm.select("doc_id")).count()
-    println(s"[scratch] hostcap symmetric-diff rows = $a")
-  }
-
-  /** `runMain graft.Scratch time <key> [key ...] [--reps N] [--sf <dir>]`
-    * — warm per-key wall times via the noop sink: one warmup pass then
-    * N timed passes in ONE session (the Bench methodology for a single
-    * key, without paying a full-inventory run). */
-  private def runTime(spark: SparkSession, args: Array[String],
-      noop: org.apache.spark.sql.DataFrame => Unit): Unit = {
-    val opts = args.sliding(2).collect {
-      case Array(k, v) if k.startsWith("--") => k -> v }.toMap
-    val dir = opts.getOrElse("--sf", "/root/testdata/sf0.1")
-    val reps = opts.getOrElse("--reps", "3").toInt
-    val keys = args.takeWhile(!_.startsWith("--")).toSeq
-    keys.foreach { k =>
-      val fn = SparkEntry.queries(k)
-      noop(fn(spark, dir)) // warmup: codegen, footers, session caches
-      val times = (1 to reps).map { _ =>
-        val t0 = System.nanoTime()
-        noop(fn(spark, dir))
-        (System.nanoTime() - t0) / 1e9
-      }
-      println(f"[time] $k%-28s median ${times.sorted.apply(reps / 2)}%.2f s" +
-        s"  passes ${times.map(t => f"$t%.2f").mkString(" ")}")
-    }
-  }
-
-  /** Stage-by-stage timing of q_dedup_substring's pipeline at sf0.1 —
-    * one-off hot-spot probe. */
-  private def runSpanProbe(spark: SparkSession): Unit = {
-    import org.apache.spark.sql.functions._
-    import graft.functions.TextFunctions.tokens
-    val d = "/root/testdata/sf0.1"
-    def time[A](tag: String)(f: => A): A = {
-      val t0 = System.nanoTime(); val r = f
-      println(f"[spanprobe] $tag ${(System.nanoTime() - t0) / 1e9}%.2f s"); r
-    }
-    val df = Tables.documents(spark, d)
-    val toks = graft.operators.Spread.forKernel(
-      df.select(col("doc_id").as("doc_id"), col("text").as("_t")))
-      .select(col("doc_id"), tokens(col("_t")).as("tk"))
-    time("toks.count")(toks.count())
-    val n = 10
-    val sh = toks.select(col("doc_id"), col("tk"),
-      when(size(col("tk")) >= n,
-        expr(s"transform(sequence(0, size(tk) - $n), i -> " +
-          s"struct(i AS start, " +
-          s"xxhash64(array_join(slice(tk, i + 1, $n), ' ')) AS h))"))
-        .otherwise(expr("array()").cast("array<struct<start:int,h:bigint>>"))
-        .as("shs"))
-    time("sh shingles built")(sh.select(sum(size(col("shs")))).head())
-    val flat = sh.select(col("doc_id"), explode(col("shs")).as("s"))
-      .select(col("doc_id"), col("s.start").as("start"), col("s.h").as("h"))
-    time("flat count")(flat.count())
-    val dups = flat.groupBy("h").agg(count(lit(1)).as("c"))
-      .filter(col("c") > 1).select("h")
-    time("dups count")(dups.count())
-    val covered = flat.join(dups, "h").groupBy("doc_id")
-      .agg(collect_list(col("start")).as("starts"))
-    time("covered count")(covered.count())
-    time("full query")(SparkEntry.queries("q_dedup_substring")(spark, d)
-      .queryExecution.executedPlan.execute().count())
-    time("full query 2nd")(SparkEntry.queries("q_dedup_substring")(spark, d)
-      .queryExecution.executedPlan.execute().count())
-  }
-
-  /** Stage-by-stage probe of q_gopher_repetition's kernel form — where
-    * does a map-only query spend 4 s at sf0.1? */
-  private def runGopherProbe(spark: SparkSession,
-      noop: org.apache.spark.sql.DataFrame => Unit): Unit = {
-    import org.apache.spark.sql.functions._
-    val d = "/root/testdata/sf0.1"
-    def time[A](tag: String)(f: => A): A = {
-      val t0 = System.nanoTime(); val r = f
-      println(f"[gopherprobe] $tag ${(System.nanoTime() - t0) / 1e9}%.2f s"); r
-    }
-    // pure JVM kernel cost, single-threaded, driver-side
-    val texts = Tables.documents(spark, d).select("text")
-      .collect().map(_.getString(0))
-    time("kernel 1-thread driver")(
-      texts.foreach(t => graft.plans.GopherRepStats.compute(
-        org.apache.spark.unsafe.types.UTF8String.fromString(t))))
-    val base = graft.operators.Spread.forKernel(
-      Tables.documents(spark, d)
-        .select(col("doc_id"), col("text").as("_t")))
-    time("scan+spread only")(noop(base))
-    val ex = base.select(col("doc_id"),
-      explode(graft.plans.GopherRepStats.repStats(col("_t"))).as("st"))
-    time("kernel+explode")(noop(ex))
-    time("kernel+explode 2nd")(noop(ex))
-    val q = graft.operators.QualityRules.gopherRepetition(
-      Tables.documents(spark, d), col("doc_id"), col("text"))
-    time("full no-order")(noop(q))
-    time("full with orderBy")(noop(q.orderBy("doc_id")))
-  }
-
-  private def runExplain(spark: SparkSession, args: Array[String]): Unit = {
-    val sfIdx = args.indexOf("--sf")
-    val dir = if (sfIdx >= 0) args(sfIdx + 1) else "/root/testdata/sf0.01"
-    val keys = (if (sfIdx >= 0) args.take(sfIdx) else args).toSeq
-    keys.foreach { k =>
-      println(s"==== $k @ $dir ====")
-      SparkEntry.queries(k)(spark, dir).explain("formatted")
-    }
-  }
-
-  /** IVF/PQ serving soak at 1M × 384-dim (the reference's real
-    * dimensionality; same deterministic clustered corpus as
-    * [[runGraphSoak]]) — the scale evidence for the round-7 persisted
-    * serving tier at honest byte sizes (hash jitter is incompressible,
-    * unlike the 200k section's repetitive synthetic). Patterns measured:
-    *  - persisted IVF build (k=256, iters=2) + partition-pruned serve
-    *    (nProbe=8/256): rows decoded vs corpus, wall vs brute force,
-    *    recall@10 of the probe budget;
-    *  - PQ codebooks trained on a DETERMINISTIC 5% SAMPLE then encoding
-    *    the full corpus — the train-on-sample pattern a 100 TB corpus
-    *    requires (FAISS practice; training never scans everything);
-    *  - codes-only store bytes vs raw vectors, ADC + bounded-fetch
-    *    refine wall over 1M codes.
-    * Run with SPARK_DRIVER_MEM=48g (the localCheckpoint'd corpus is
-    * ~3 GB raw, as in graphsoak). */
-  private def runIvfSoak(spark: SparkSession): Unit = {
-    import graft.operators.{Ann, Knn, Pq}
-    val n = 1000000L; val dim = 384; val nClusters = 256
-    val corpus = spark.range(n).select(col("id").as("vec_id"),
-      transform(sequence(lit(0), lit(dim - 1)), j =>
-        when(j === col("id") % nClusters, lit(10.0)).otherwise(lit(0.0)) +
-          pmod(hash(col("id"), j), lit(1000)).cast("double") / 1000.0)
-        .as("embedding"))
-      .localCheckpoint(eager = true)
-    val dir = java.nio.file.Files.createTempDirectory("graft-ivfsoak-")
-    def dirBytes(p: String): Long = {
-      val s = java.nio.file.Files.walk(java.nio.file.Paths.get(p))
-      try s.filter(java.nio.file.Files.isRegularFile(_))
-        .mapToLong(java.nio.file.Files.size(_)).sum()
-      finally s.close()
-    }
-    val query: Seq[Double] = corpus.filter(col("vec_id") === 4242L)
-      .select(col("embedding")).collect()(0).getSeq[Double](0)
-
-    time("write raw corpus 1M x 384")(
-      corpus.write.mode("overwrite").parquet(s"$dir/raw"))
-    val raw = spark.read.parquet(s"$dir/raw")
-    val rawB = dirBytes(s"$dir/raw")
-
-    time("buildIvfIndex 1M k=256 iters=2")(
-      Ann.buildIvfIndex(corpus, col("vec_id"), col("embedding"),
-        s"$dir/ivf", k = 256, iters = 2))
-    val (data, cents) = Ann.readIvfIndex(spark, s"$dir/ivf")
-    // cell balance under farthest-first seeding (round-8): the round-7
-    // soak measured 6.0x pruning where balanced cells give 32x because
-    // smallest-md5-k seeds left ~1/e of the 256 true clusters unseeded
-    println(s"[scratch] cellStats after build: ${Ann.cellStats(data)}")
-
-    val bfTop = time("brute-force top-10 (full raw scan)")(
-      Knn.knnExact(raw, col("embedding"), query, 10, preFilter = None)
-        .select("vec_id").collect().map(_.getLong(0)).toSet)
-    val pruned = Ann.ivfTopK(data, col("cell"), col("embedding"), cents,
-      query, k = 10, nProbe = 8)
-    val qe = pruned.queryExecution
-    val ivfTop = time("ivfTopK nProbe=8/256 (pruned scan)")(
-      pruned.select("vec_id").collect().map(_.getLong(0)).toSet)
-    // second run on the warm decode path (the serve-many steady state)
-    time("ivfTopK nProbe=8/256 (repeat)")(
-      Ann.ivfTopK(data, col("cell"), col("embedding"), cents,
-        query, k = 10, nProbe = 8).collect())
-    qe.executedPlan.execute().foreach(_ => ())
-    val decoded = qe.executedPlan.collectLeaves()
-      .map(_.metrics("numOutputRows").value).sum
-    println(f"[scratch] IVF pruned scan decoded $decoded%d of $n%d rows " +
-      f"(${n.toDouble / math.max(1L, decoded)}%.1f x fewer); " +
-      f"recall@10 = ${(bfTop & ivfTop).size / 10.0}%.2f")
-
-    // train-on-sample PQ: deterministic 5% (xxhash64 threshold), encode 1M
-    val sample = corpus.filter(pmod(xxhash64(col("vec_id")), lit(20)) === 0)
-    val model = time("trainCodebooks m=8 ks=256 on 5% sample")(
-      Pq.trainCodebooks(sample, col("vec_id"), col("embedding"),
-        m = 8, ks = 256, iters = 3))
-    time("encode 1M + write codes-only store")(
-      Pq.encode(corpus, col("embedding"), model)
-        .select(col("vec_id"), col("codes"))
-        .sortWithinPartitions("vec_id")
-        .write.mode("overwrite").parquet(s"$dir/codes"))
-    val codeB = dirBytes(s"$dir/codes")
-    println(f"[scratch] bytes on disk: raw $rawB%d, codes $codeB%d " +
-      f"(${rawB.toDouble / codeB}%.1f x smaller)")
-    val codes = spark.read.parquet(s"$dir/codes")
-    val pqTop = time("pqTopKRefinedFetch over 1M codes")(
-      Pq.pqTopKRefinedFetch(codes, col("codes"), raw, "vec_id",
-          col("embedding"), model, query, k = 10, overfetch = 8)
-        .select("vec_id").collect().map(_.getLong(0)).toSet)
-    println(f"[scratch] PQ fetch-refine recall@10 = " +
-      f"${(bfTop & pqTop).size / 10.0}%.2f (sample-trained codebooks, " +
-      "overfetch=8 — the round-7 hardcoded budget)")
-
-    // round-8: the MEASURED overfetch budget — sweep the knob directly
-    // over the real 1M store/model (each point is one ~3 s serve; the
-    // in-query path sizes the same knob from a sampled sweep via
-    // AnnMatrix.autoServeBudgets) and pick cheapest meeting 0.9
-    import graft.operators.AnnMatrix
-    val pqFrontier = Seq(8, 32, 64, 128, 256, 512).map { of =>
-      val top = Pq.pqTopKRefinedFetch(codes, col("codes"), raw, "vec_id",
-          col("embedding"), model, query, k = 10, overfetch = of)
-        .select("vec_id").collect().map(_.getLong(0)).toSet
-      AnnMatrix.FrontierRow("pq", of, (bfTop & top).size / 10.0,
-        n.toDouble + 10.0 * of)
-    }
-    pqFrontier.foreach(r => println(
-      f"[scratch] pq overfetch=${r.budget}%3d recall@10=${r.recall}%.2f"))
-    val pqPick = AnnMatrix.pickBudgets(pqFrontier, targetRecall = 0.9)("pq")
-    println(f"[scratch] pq PICKED overfetch=${pqPick.budget} " +
-      f"recall=${pqPick.recall}%.2f")
-
-    // round-8: IVF-PQ refined serve at 1M — residual codebooks trained
-    // on the same deterministic 5% sample (ks=64 bounds the train cost;
-    // the refine window, not ADC resolution, carries the recall), codes
-    // partitioned by cell, then the pruned-scan + bounded-refine serve
-    val resModel = time("trainResidual m=8 ks=64 on 5% sample")(
-      Pq.trainResidual(
-        data.filter(pmod(xxhash64(col("vec_id")), lit(20)) === 0),
-        col("vec_id"), col("embedding"), cents, m = 8, ks = 64, iters = 2))
-    time("encodeResidual 1M + write cell-partitioned codes store")(
-      Pq.encodeResidual(data.withColumn("cell", col("cell").cast("int")),
-          col("embedding"), cents, resModel)
-        .select(col("vec_id"), col("cell"), col("codes"))
-        .repartition(col("cell"))
-        .write.mode("overwrite").partitionBy("cell").parquet(s"$dir/ivfpq"))
-    val resCodes = spark.read.parquet(s"$dir/ivfpq")
-    val ivfPqFrontier = Seq(8, 32, 64, 128, 256, 512).map { of =>
-      val top = Pq.ivfPqTopKRefinedFetch(resCodes, col("codes"), cents,
-          raw, "vec_id", col("embedding"), resModel, query, k = 10,
-          nProbe = 8, overfetch = of)
-        .select("vec_id").collect().map(_.getLong(0)).toSet
-      AnnMatrix.FrontierRow("ivf-pq", of, (bfTop & top).size / 10.0,
-        10.0 * of)
-    }
-    ivfPqFrontier.foreach(r => println(
-      f"[scratch] ivf-pq nProbe=8 overfetch=${r.budget}%3d " +
-      f"recall@10=${r.recall}%.2f"))
-    val ipPick = AnnMatrix.pickBudgets(ivfPqFrontier, targetRecall = 0.9)("ivf-pq")
-    println(f"[scratch] ivf-pq PICKED overfetch=${ipPick.budget} " +
-      f"recall=${ipPick.recall}%.2f")
-    val t0 = System.nanoTime()
-    Pq.ivfPqTopKRefinedFetch(resCodes, col("codes"), cents, raw, "vec_id",
-        col("embedding"), resModel, query, k = 10, nProbe = 8,
-        overfetch = ipPick.budget).collect()
-    println(f"[scratch] ivf-pq refined serve wall at picked budget: " +
-      f"${(System.nanoTime() - t0) / 1e9}%.2f s")
-  }
-
-  /** Persisted-serving decomposition at 200k×64 (round 7): what each ANN
-    * tier's on-disk layout buys at query time —
-    *  - IVF: rows DECODED by the pruned cell scan (PartitionFilters) vs
-    *    the full corpus, and wall vs brute force;
-    *  - PQ: codes-store bytes vs raw vector bytes (the m-ints-per-row
-    *    compression), and the fetch-refine wall vs the carried-vector
-    *    refine over the same store.
-    * Numbers land in BASELINE.md. */
-  private def runIvfServe(spark: SparkSession): Unit = {
-    import graft.operators.{Ann, Knn, Pq}
-    val n = 200000L; val dim = 64; val nClusters = 64
-    val corpus = spark.range(n).select(col("id").as("vec_id"),
-      transform(sequence(lit(0), lit(dim - 1)), j =>
-        when(j === col("id") % nClusters, lit(10.0)).otherwise(lit(0.0)) +
-          ((col("id") * 31 + j * 7) % 100).cast("double") / 1000.0)
-        .as("embedding"))
-      .localCheckpoint(eager = true)
-    val dir = java.nio.file.Files.createTempDirectory("graft-ivfserve-")
-    val query: Seq[Double] = corpus.filter(col("vec_id") === 4242L)
-      .select(col("embedding")).collect()(0).getSeq[Double](0)
-
-    def dirBytes(p: String): Long = {
-      val root = java.nio.file.Paths.get(p)
-      val s = java.nio.file.Files.walk(root)
-      try s.filter(java.nio.file.Files.isRegularFile(_))
-        .mapToLong(java.nio.file.Files.size(_)).sum()
-      finally s.close()
-    }
-
-    // raw layout for the brute-force baseline + byte comparison
-    time("write raw corpus parquet")(
-      corpus.write.mode("overwrite").parquet(s"$dir/raw"))
-    val raw = spark.read.parquet(s"$dir/raw")
-
-    time("buildIvfIndex 200k k=64 iters=3")(
-      Ann.buildIvfIndex(corpus, col("vec_id"), col("embedding"),
-        s"$dir/ivf", k = 64, iters = 3))
-    val (data, cents) = Ann.readIvfIndex(spark, s"$dir/ivf")
-
-    // brute force over the raw layout
-    val bf = Knn.knnExact(raw, col("embedding"), query, 10,
-      preFilter = None)
-    time("brute-force top-10 (full scan)")(bf.collect())
-
-    // pruned serve: nProbe=4 of 64 cells
-    val pruned = Ann.ivfTopK(data, col("cell"), col("embedding"), cents,
-      query, k = 10, nProbe = 4)
-    val qe = pruned.queryExecution
-    time("ivfTopK nProbe=4/64 (pruned scan)")(
-      qe.executedPlan.execute().foreach(_ => ()))
-    val decoded = qe.executedPlan.collectLeaves()
-      .map(_.metrics("numOutputRows").value).sum
-    println(f"[scratch] IVF pruned scan decoded $decoded%d of $n%d rows " +
-      f"(${n.toDouble / math.max(1L, decoded)}%.1f x fewer)")
-
-    // PQ codes store: bytes + serve shapes
-    val model = time("trainCodebooks m=8 ks=256 iters=3")(
-      Pq.trainCodebooks(corpus, col("vec_id"), col("embedding"),
-        m = 8, ks = 256, iters = 3))
-    time("write codes-only store")(
-      Pq.encode(corpus, col("embedding"), model)
-        .select(col("vec_id"), col("codes"))
-        .sortWithinPartitions("vec_id")
-        .write.mode("overwrite").parquet(s"$dir/pqcodes"))
-    val rawB = dirBytes(s"$dir/raw"); val codeB = dirBytes(s"$dir/pqcodes")
-    println(f"[scratch] bytes on disk: raw $rawB%d, codes $codeB%d " +
-      f"(${rawB.toDouble / codeB}%.1f x smaller)")
-    val codes = spark.read.parquet(s"$dir/pqcodes")
-    time("pqTopKRefinedFetch (codes scan + id fetch)")(
-      Pq.pqTopKRefinedFetch(codes, col("codes"), raw, "vec_id",
-        col("embedding"), model, query, k = 10, overfetch = 8).collect())
-    // the carried-vector form over a combined store (codes + vectors in
-    // one scan) — what the separated layout replaces
-    time("write combined codes+vector store")(
-      Pq.encode(corpus, col("embedding"), model)
-        .write.mode("overwrite").parquet(s"$dir/pqboth"))
-    val both = spark.read.parquet(s"$dir/pqboth")
-    time("pqTopKRefined (vectors carried in scan)")(
-      Pq.pqTopKRefined(both, col("codes"), col("embedding"), model,
-        query, k = 10, overfetch = 8).collect())
-    println(f"[scratch] combined-store bytes: ${dirBytes(s"$dir/pqboth")}%d")
-  }
-
-  /** Streaming ingest → graph-serve e2e at soak scale (round-6 VERDICT
-    * item 9): the chunk → digest-dedup → graph-index chain from
-    * StreamsSpec's toy e2e, driven over the 50k-doc soak corpus with a
-    * mid-stream crash between ingest waves and a worst-case full
-    * checkpoint-loss replay. Asserts (crashing on violation):
-    *  - exactly-once ingest across the crash: the final indexed id set
-    *    EQUALS the distinct-digest set of the chunk store;
-    *  - the full fresh-checkpoint replay (checkpoint lost entirely;
-    *    every row a replacement → every shard takes the deterministic
-    *    rebuild path) leaves the live index BYTE-IDENTICAL to an
-    *    independent single-batch build of the same chunk store into an
-    *    empty index — the toy-spec identity at 50k. (The wave-built
-    *    index itself is NOT expected byte-equal: HNSW edges depend on
-    *    insertion order; the contract is that a full rebuild is a
-    *    deterministic function of the surviving (id, vec) SET.)
-    *  - search over the wave-built index returns the probe's own chunk.
-    * Reports per-wave wall, rebuilt-shard counts, dedup state-store
-    * size, and index size — the BASELINE.md rows. */
-  private def runStreamSoak(spark: SparkSession): Unit = {
-    import org.apache.spark.sql.functions._
-    import graft.streaming.Streams
-    import graft.operators.GraphAnn
-    import graft.sources.HrPipeline.featureHashEmbedding
-    import spark.implicits._
-    val base = java.nio.file.Files
-      .createTempDirectory("graft-streamsoak-").toString
-    val srcDir = s"$base/src"; val chunkDir = s"$base/chunks"
-    val ingestDir = s"$base/ingest"; val idx = s"$base/idx"
-    val nDocs = 50000L
-    // event times within a 300 s span — safely inside chunkStream's
-    // 10-minute watermark horizon so no wave can drop late rows
-    val docs = Soak.genDocs(spark, nDocs)
-      .withColumn("ts", timestamp_seconds(lit(1700000000L) + col("doc_id") % 300))
-    time("generate+write 50k docs (10 files)")(
-      docs.repartition(10).write.mode("overwrite").parquet(srcDir))
-
-    // ---- stage A: chunk the doc stream (5 micro-batches of 2 files)
-    val schemaA = spark.read.parquet(srcDir).schema
-    val qa = Streams.chunkStream(spark,
-      spark.readStream.schema(schemaA).option("maxFilesPerTrigger", 2)
-        .parquet(srcDir),
-      chunkDir, s"$base/chkA", chunkTokens = 32, stride = 32)
-    time("stage A: chunkStream 50k docs, 5 batches") {
-      try qa.processAllAvailable() finally qa.stop()
-    }
-    val chunks = spark.read.parquet(chunkDir)
-    val nChunks = chunks.count()
-    val nDigests = chunks.select("digest").distinct().count()
-    println(s"[scratch] chunk store: $nChunks chunks, $nDigests distinct digests")
-
-    // ---- stage B: digest-dedup + embed + graph upsert, arriving in 5
-    // waves (one wave = one micro-batch = one chunk-store batch_id
-    // partition revealed to the file source). Crash mid-stream: the
-    // query is STOPPED after wave 3 and restarted on the same
-    // checkpoint for waves 4-5 — exactly-once must hold across it.
-    val dim = 32; val shards = 16
-    def startIndexQuery(): org.apache.spark.sql.streaming.StreamingQuery = {
-      val schemaB = spark.read.parquet(chunkDir).schema
-      val src = spark.readStream.schema(schemaB).parquet(ingestDir)
-        .dropDuplicates("digest")
-        .select(expr("xxhash64(digest)").as("vec_id"),
-          featureHashEmbedding(col("chunk_text"), dim).as("embedding"))
-      Streams.graphUpsertStream(spark, src, idx, s"$base/chkB",
-        numShards = shards, m = 8, efConstruction = 40,
-        onBatch = (bid, adds, rebuilt) => println(
-          s"[scratch]   batch $bid: $adds adds, rebuilt shards = $rebuilt"))
-    }
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    // the actual batch_id=* partitions stage A produced (don't assume a
-    // trigger count), numerically ordered
-    val waves = fs.listStatus(new org.apache.hadoop.fs.Path(chunkDir))
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("batch_id="))
-      .map(_.getPath.getName)
-      .sortBy(_.stripPrefix("batch_id=").toLong).toIndexedSeq
-    println(s"[scratch] chunk-store waves: ${waves.mkString(", ")}")
-    def reveal(wave: String): Unit = org.apache.hadoop.fs.FileUtil.copy(
-      fs, new org.apache.hadoop.fs.Path(s"$chunkDir/$wave"),
-      fs, new org.apache.hadoop.fs.Path(s"$ingestDir/$wave"),
-      false, spark.sparkContext.hadoopConfiguration)
-    fs.mkdirs(new org.apache.hadoop.fs.Path(ingestDir))
-    val (before, after) = waves.splitAt(math.max(1, waves.size * 3 / 5))
-    var qb = startIndexQuery()
-    before.foreach { w =>
-      time(s"stage B wave $w (ingest + index)") {
-        reveal(w); qb.processAllAvailable()
+        println(f"[time] $k%-28s median ${times.sorted.apply(reps / 2)}%.2f s" +
+          s"  passes ${times.map(t => f"$t%.2f").mkString(" ")}")
       }
     }
-    time("CRASH: stop the index query mid-stream")(qb.stop())
-    qb = startIndexQuery()
-    after.foreach { w =>
-      time(s"stage B wave $w (after restart)") {
-        reveal(w); qb.processAllAvailable()
-      }
-    }
-    qb.stop()
-
-    // order-insensitive content hash: per-row xxhash64 summed in
-    // DECIMAL(38,0) — a LONG sum overflows under ANSI mode (Spark 4
-    // default) and kills the job
-    def indexState(dir: String): (Long, String) = {
-      val df = GraphAnn.readGraphIndex(spark, dir)
-        .select(col("shard"), col("id"), col("vec"), col("neighbors"),
-          col("layers"))
-      (df.count(),
-        df.select(xxhash64(col("shard"), col("id"), col("vec"),
-          col("neighbors"), col("layers")).cast("decimal(38,0)").as("h"))
-          .agg(sum(col("h"))).head.getDecimal(0).toString)
-    }
-    val (rows1, hash1) = indexState(idx)
-    require(rows1 == nDigests,
-      s"exactly-once across the crash: indexed $rows1 != $nDigests digests")
-    println(s"[scratch] index after crash+restart: $rows1 nodes, hash=$hash1")
-
-    // search sanity: the probe chunk's own id must be the top hit
-    val probeRow = chunks.orderBy("digest").limit(1)
-      .select(col("chunk_text"), expr("xxhash64(digest)").as("vec_id"))
-      .head
-    val probeVec = spark.range(1).select(
-        featureHashEmbedding(lit(probeRow.getString(0)), dim).as("e"))
-      .as[Seq[Double]].head
-    val hit = GraphAnn.graphTopKIndexed(spark, idx, probeVec, k = 1, ef = 64)
-      .select("vec_id").as[Long].head()
-    require(hit == probeRow.getLong(1),
-      s"probe chunk not found: got $hit want ${probeRow.getLong(1)}")
-
-    // ---- worst-case crash: checkpoint lost entirely. A fresh
-    // checkpoint replays the WHOLE chunk store into the live index in
-    // one batch — every row is a replacement, every shard rebuilds
-    // deterministically from the surviving (id, vec) set.
-    def fullRun(chk: String, intoDir: String): Unit = {
-      val schemaB = spark.read.parquet(chunkDir).schema
-      val src = spark.readStream.schema(schemaB).parquet(ingestDir)
-        .dropDuplicates("digest")
-        .select(expr("xxhash64(digest)").as("vec_id"),
-          featureHashEmbedding(col("chunk_text"), dim).as("embedding"))
-      val q = Streams.graphUpsertStream(spark, src, intoDir, chk,
-        numShards = shards, m = 8, efConstruction = 40)
-      try q.processAllAvailable() finally q.stop()
-    }
-    time("full checkpoint-loss replay (1 batch, all shards rebuild)")(
-      fullRun(s"$base/chkB2", idx))
-    val (rows2, hash2) = indexState(idx)
-    require(rows2 == rows1,
-      s"replay changed the indexed id set: $rows1 -> $rows2")
-    // independent ground truth: the same chunk store built in a single
-    // batch into an EMPTY index. rebuild-of-live == build-from-empty is
-    // the byte-identity the toy spec pins; here at 50k.
-    time("independent single-batch build (empty index)")(
-      fullRun(s"$base/chkB3", s"$base/idxFresh"))
-    val (rowsF, hashF) = indexState(s"$base/idxFresh")
-    require(rows2 == rowsF && hash2 == hashF,
-      s"replayed live index must be byte-identical to the fresh build: " +
-        s"($rows2,$hash2) vs ($rowsF,$hashF)")
-    println(s"[scratch] replayed index: $rows2 nodes, hash=$hash2 " +
-      s"(byte-identical to the independent fresh build)")
-
-    def duBytes(p: String): Long = {
-      val path = new org.apache.hadoop.fs.Path(p)
-      if (fs.exists(path)) fs.getContentSummary(path).getLength else 0L
-    }
-    println(f"[scratch] dedup state store (chkB)  = ${duBytes(s"$base/chkB/state") / 1048576.0}%8.1f MB for $nDigests%d digests")
-    println(f"[scratch] index on disk             = ${duBytes(idx) / 1048576.0}%8.1f MB / $shards%d shards")
-  }
-
-  /** recommendBudgets on the 200k clustered corpus, swept 1-in-4
-    * hash-sampled (50k) — the scale path a user would run on a big
-    * corpus: the frontier estimates the recall curve at 1/4 the cost,
-    * then pickBudgets names the operating point. Table lands in
-    * BASELINE.md (VERDICT round-6 item 7). */
-  private def runFrontier(spark: SparkSession): Unit = {
-    import graft.operators.AnnMatrix
-    val n = 200000L; val dim = 64; val nClusters = 64
-    val corpus = spark.range(n).select(col("id").as("vec_id"),
-      transform(sequence(lit(0), lit(dim - 1)), j =>
-        when(j === col("id") % nClusters, lit(10.0)).otherwise(lit(0.0)) +
-          ((col("id") * 31 + j * 7) % 100).cast("double") / 1000.0)
-        .as("embedding"))
-      .localCheckpoint(eager = true)
-    val frontier = time("recommendBudgets 200k sampled 1-in-4") {
-      AnnMatrix.recommendBudgets(corpus, col("vec_id"), col("embedding"),
-        queryIds = Seq(4242L, 77L, 123456L, 9999L, 31415L), k = 10,
-        nProbes = Seq(1, 2, 4, 8, 16), efs = Seq(16, 32, 64, 128),
-        sampleOneIn = 4,
-        b = AnnMatrix.Budgets(ivfK = 64, graphShards = 32, kmeansIters = 5))
-    }
-    println("[scratch] frontier (50k sample of 200k clustered, 5 queries):")
-    println(AnnMatrix.renderFrontier(frontier, n / 4))
-    Seq(0.8, 0.95).foreach { t =>
-      AnnMatrix.pickBudgets(frontier, t).toSeq.sortBy(_._1).foreach {
-        case (tier, r) =>
-          println(f"[scratch] pick@$t%.2f: $tier%-6s budget=${r.budget}%4d " +
-            f"recall=${r.recall}%.2f rows=${r.rowsScanned}%.0f")
-      }
-    }
-  }
-
-  /** Graph ANN at 1M × 384-dim (the reference's real dimensionality,
-    * config.py:16 — all-MiniLM-L6-v2 emits 384): build + persist the
-    * sharded hierarchical index, then measure the batch join on the
-    * exchange-free indexed path against the repartition path it replaced
-    * (round-6 VERDICT item 6: quantify the per-invocation exchange share
-    * at a size where it means something), with shuffle bytes observed by
-    * a task-metrics listener, per-shard memory footprint (the
-    * `it.toArray` holds one whole shard per task), and recall@10 vs
-    * brute force. Numbers land in BASELINE.md. */
-  private def runGraphSoak(spark: SparkSession,
-                           noop: org.apache.spark.sql.DataFrame => Unit): Unit = {
-    import graft.operators.GraphAnn
-    import spark.implicits._
-    val n = 1000000L; val dim = 384; val nClusters = 256; val shards = 64
-    // clustered like real embedding corpora: center c = 10·e_{c mod dim}
-    // + hash jitter. All arithmetic in vec_id — identical every run.
-    val corpus = spark.range(n).select(col("id").as("vec_id"),
-      transform(sequence(lit(0), lit(dim - 1)), j =>
-        when(j === col("id") % nClusters, lit(10.0)).otherwise(lit(0.0)) +
-          pmod(hash(col("id"), j), lit(1000)).cast("double") / 1000.0)
-        .as("embedding"))
-      .localCheckpoint(eager = true) // ~3 GB; measure operators, not gen
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-graphsoak-").toString
-
-    val g = time(s"graph build S=$shards m=16 efC=100 (1M x 384)") {
-      val b = GraphAnn.buildGraph(corpus, col("vec_id"), col("embedding"),
-        numShards = shards, m = 16, efConstruction = 100)
-      b.persist().count(); b
-    }
-    time("writeGraphIndex (partitionBy shard)")(
-      GraphAnn.writeGraphIndex(g, dir))
-    g.unpersist()
-
-    // per-shard memory: one task materializes one whole shard as
-    // Array[GraphNode] — the bytes that must fit in an executor's task
-    // slot. Measured (JVM object graph) and raw-vector arithmetic.
-    val shard0 = GraphAnn.readGraphIndexAligned(spark, dir)
-      .filter(_.shard == 0).collect()
-    val est = org.apache.spark.util.SizeEstimator.estimate(shard0)
-    println(f"[scratch] shard 0: ${shard0.length}%d nodes; JVM est " +
-      f"${est / 1e6}%.0f MB; raw vectors " +
-      f"${shard0.length.toLong * dim * 8 / 1e6}%.0f MB " +
-      f"(x$shards shards = ${n * dim * 8 / 1e9}%.1f GB corpus)")
-
-    def exchanges(df: org.apache.spark.sql.DataFrame): Int = {
-      df.queryExecution.executedPlan.execute().foreach(_ => ())
-      val p = df.queryExecution.executedPlan.toString
-      "(?m)^\\s*(?:[+:\\-\\s]*)Exchange ".r
-        .findAllIn(p.split("== Initial Plan ==").head).length
-    }
-    def shuffled[T](f: => T): (T, Long) = {
-      val written = new java.util.concurrent.atomic.AtomicLong
-      val l = new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(
-            te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-          val m = te.taskMetrics
-          if (m != null) written.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-        }
-      }
-      spark.sparkContext.addSparkListener(l)
-      try { val r = f; Thread.sleep(2000); (r, written.get) }
-      finally spark.sparkContext.removeSparkListener(l)
-    }
-
-    // single query: indexed path plans ZERO exchanges at 1M too
-    val q = Knn.vectorAt(corpus, col("vec_id"), 4242L, col("embedding"))
-    val single = GraphAnn.graphTopKIndexed(spark, dir, q, k = 10, ef = 100)
-    require(exchanges(single) == 0,
-      "graphTopKIndexed planned an Exchange at 1M")
-    (1 to 2).foreach(r => time(s"graphTopKIndexed ef=100 (r$r)")(
-      noop(GraphAnn.graphTopKIndexed(spark, dir, q, k = 10, ef = 100))))
-    val exact = Knn.knnExact(corpus, col("embedding"), q, k = 10)
-      .select("vec_id").as[Long].collect().toSet
-    val approx = GraphAnn.graphTopKIndexed(spark, dir, q, k = 10, ef = 100)
-      .select("vec_id").as[Long].collect().toSet
-    println(s"[scratch] recall@10 at 1M x 384: ${(approx & exact).size / 10.0}")
-
-    // batch join, 1000 queries: the exchange-free serving path vs the
-    // repartition path — the shuffle-bytes delta IS the per-invocation
-    // tax item 1 removed (at 1M×384 the graph+vectors ≈ 3.2 GB moving
-    // through an exchange per batch on the old path)
-    val queries = corpus.filter(col("vec_id") % 1000 === 0)
-      .localCheckpoint(eager = true)
-    val idxJoin = GraphAnn.graphKnnJoinIndexed(queries, col("vec_id"),
-      col("embedding"), dir, k = 10, ef = 100, maxBatch = 2000)
-    require(exchanges(idxJoin) == 1,
-      "indexed batch join must plan exactly the bounded top-k merge")
-    val repart = GraphAnn.readGraphIndex(spark, dir)
-    Seq(1, 2).foreach { r =>
-      val (_, bIdx) = shuffled {
-        time(s"graphKnnJoinIndexed 1000q ef=100 (r$r)")(
-          noop(GraphAnn.graphKnnJoinIndexed(queries, col("vec_id"),
-            col("embedding"), dir, k = 10, ef = 100, maxBatch = 2000)))
-      }
-      val (_, bRep) = shuffled {
-        time(s"graphKnnJoin REPARTITION path (r$r)")(
-          noop(GraphAnn.graphKnnJoin(queries, col("vec_id"),
-            col("embedding"), repart, k = 10, ef = 100, maxBatch = 2000)))
-      }
-      println(f"[scratch] shuffle bytes r$r: indexed ${bIdx / 1e6}%.0f MB " +
-        f"vs repartition ${bRep / 1e6}%.0f MB " +
-        f"(exchange share removed: ${(bRep - bIdx) / 1e6}%.0f MB/batch)")
-    }
-  }
-
-  /** Reconcile the q_dedup_minhash vs q_dedup_minhash_bucketed bench
-    * rows (round-6 VERDICT "What's wrong #2"): warm both exactly as
-    * Bench does, then time three consecutive runs of each — the claim
-    * in BASELINE.md must match what a steady-state pass measures. */
-  private def runBandBench(spark: SparkSession,
-                           noop: org.apache.spark.sql.DataFrame => Unit): Unit = {
-    val d = "/root/testdata/sf0.1"
-    val qs = Seq("q_dedup_minhash", "q_dedup_minhash_bucketed")
-    qs.foreach(n => noop(SparkEntry.queries(n)(spark, d))) // warmup
-    (1 to 3).foreach { r =>
-      qs.foreach { n =>
-        time(s"$n run$r")(noop(SparkEntry.queries(n)(spark, d)))
-      }
-    }
-  }
-
-  /** External-encoder seam throughput: 100k ~10-token docs through
-    * BatchEncode.withEmbedding with the real ProjectionEncoder kernel in
-    * the reference's 5,000-doc batches (vector_db.py:144-160 semantics).
-    * The docs/s row lands in BASELINE.md — it measures the seam the way
-    * a model swap would see it (per-executor weight load + one matmul
-    * pass per batch). */
-  private def runEncode(spark: SparkSession,
-                        noop: org.apache.spark.sql.DataFrame => Unit): Unit = {
-    import graft.operators.BatchEncode
-    val n = 100000L
-    val docs = spark.range(n).select(col("id").as("doc_id"),
-      concat_ws(" ", (0 until 10).map(i =>
-        concat(lit("tok"), (col("id") + i) % 5000)): _*).as("text"))
-      .localCheckpoint(eager = true)
-    (1 to 2).foreach { r =>
-      val t0 = System.nanoTime()
-      noop(BatchEncode.withEmbedding(docs, "text",
-        new BatchEncode.ProjectionEncoder(dim = 64), batchSize = 5000))
-      val sec = (System.nanoTime() - t0) / 1e9
-      println(f"[scratch] ProjectionEncoder 100k docs batch=5000 (r$r): " +
-        f"$sec%.2f s  (${n / sec}%.0f docs/s)")
-    }
-  }
-
-  /** Unified ANN tier table (AnnMatrix) on both corpora: the 2k
-    * near-uniform sf0.1 embeddings (the adversarial case for every
-    * index) and the 200k clustered synthetic corpus (the favorable
-    * case). Markdown rows land in BASELINE.md. Not in the no-arg run:
-    * costs minutes of index builds. */
-  private def runAnnMatrix(spark: SparkSession): Unit = {
-    import graft.operators.AnnMatrix
-    val emb = spark.read.parquet("/root/testdata/sf0.1/embeddings.parquet")
-    val nEmb = emb.count()
-    val r1 = time("annmatrix sf0.1 (2k near-uniform)") {
-      AnnMatrix.run(emb, col("vec_id"), col("embedding"),
-        queryIds = 0L until 10L)
-    }
-    println("[scratch] sf0.1 near-uniform, 10 queries, k=10:")
-    println(AnnMatrix.render(r1, nEmb))
-
-    val n = 200000L; val dim = 64; val nClusters = 64
-    val corpus = spark.range(n).select(col("id").as("vec_id"),
-      transform(sequence(lit(0), lit(dim - 1)), j =>
-        when(j === col("id") % nClusters, lit(10.0)).otherwise(lit(0.0)) +
-          ((col("id") * 31 + j * 7) % 100).cast("double") / 1000.0)
-        .as("embedding"))
-      .localCheckpoint(eager = true)
-    val r2 = time("annmatrix 200k clustered") {
-      AnnMatrix.run(corpus, col("vec_id"), col("embedding"),
-        queryIds = Seq(4242L, 77L, 123456L, 9999L, 31415L),
-        b = AnnMatrix.Budgets(ivfK = 64, nProbe = 4, graphShards = 32,
-          kmeansIters = 5))
-    }
-    println("[scratch] 200k clustered (64 true clusters), 5 queries, k=10:")
-    println(AnnMatrix.render(r2, n))
-  }
-
-  /** Layered-vs-flat HNSW cost at 200k: distance evaluations per search
-    * and wall time, maxLevel=3 (hierarchical descent) against maxLevel=0
-    * (the round-5 flat NSW), same m/efConstruction/ef budgets, plus
-    * top-10 agreement between the two. Numbers land in BASELINE.md. */
-  private def runGraphLayers(spark: SparkSession,
-                             noop: org.apache.spark.sql.DataFrame => Unit): Unit = {
-    import graft.operators.GraphAnn
-    import spark.implicits._
-    val n = 200000L; val dim = 64; val nClusters = 64
-    val corpus = spark.range(n).select(col("id").as("vec_id"),
-      transform(sequence(lit(0), lit(dim - 1)), j =>
-        when(j === col("id") % nClusters, lit(10.0)).otherwise(lit(0.0)) +
-          ((col("id") * 31 + j * 7) % 100).cast("double") / 1000.0)
-        .as("embedding"))
-      .localCheckpoint(eager = true)
-    val q = Knn.vectorAt(corpus, col("vec_id"), 4242L, col("embedding"))
-    Seq(0, 3).foreach { maxLevel =>
-      val g = time(s"graph build S=32 m=16 ef=100 maxLevel=$maxLevel") {
-        val b = GraphAnn.buildGraph(corpus, col("vec_id"), col("embedding"),
-          numShards = 32, m = 16, efConstruction = 100, maxLevel = maxLevel)
-        b.persist().count(); b
-      }
-      (1 to 2).foreach { r =>
-        time(s"graphTopK ef=100 maxLevel=$maxLevel (r$r)")(
-          noop(GraphAnn.graphTopK(g, q, k = 10, ef = 100)))
-      }
-      // distance evaluations, summed over the 32 per-shard searches —
-      // the budget-independent cost metric (wall time at 200k is mostly
-      // job overhead)
-      val evals = GraphAnn.distEvalsTotal(g, q, ef = 100)
-      println(f"[scratch] dist evals maxLevel=$maxLevel: $evals%d " +
-        f"(${evals / 32.0}%.0f per shard of ${n / 32}%d)")
-      val top = GraphAnn.graphTopK(g, q, k = 10, ef = 100)
-        .select("vec_id").as[Long].collect().toSet
-      g.unpersist()
-      val exact = Knn.knnExact(corpus, col("embedding"), q, k = 10)
-        .select("vec_id").as[Long].collect().toSet
-      println(s"[scratch] recall@10 maxLevel=$maxLevel: " +
-        s"${(top & exact).size / 10.0}")
-    }
-  }
-
-  /** Decompose q_tfidf_simjoin's cost at sf0.1 (5k docs): hashed tf,
-    * weights, inverted-index pair products, end-to-end. Mirrors the
-    * operator's hashed-shingle stages (SimJoin.tfidfCosinePairs). */
-  private def runSimJoin(spark: SparkSession,
-                         noop: org.apache.spark.sql.DataFrame => Unit): Unit = {
-    import graft.operators.SimJoin
-    val d = "/root/testdata/sf0.1"
-    val docs = Tables.documents(spark, d)
-    val n = docs.count()
-    (1 to 2).foreach { round =>
-      val tf = docs.select(col("doc_id").as("id"),
-          explode(graft.plans.HashedShingles.shingleHashes(
-            col("text"), 3, 8)).as("h"))
-        .groupBy("id", "h").agg(count(lit(1)).as("tf"))
-      time(s"tf over hashed shingles (r$round)")(noop(tf))
-      val keep = tf.groupBy("h").agg(count(lit(1)).as("df"))
-        .filter(col("df") <= 10)
-      val w = tf.join(keep, "h")
-        .select(col("id"), col("h"), col("df"),
-          (col("tf").cast("double") * lit(n.toDouble) /
-            col("df").cast("double")).as("w"))
-      time(s"weights join (r$round)")(noop(w))
-      val wp = w.filter(col("df") >= 2).select("h", "id", "w")
-      val prods = wp.as("a").join(wp.as("b"),
-          col("a.h") === col("b.h") && col("a.id") < col("b.id"))
-        .select(col("a.id").as("id1"), col("b.id").as("id2"),
-          (col("a.w") * col("b.w")).as("prod"))
-      time(s"pair products (r$round)")(noop(prods))
-      time(s"e2e tfidfCosinePairs (r$round)")(
-        noop(SimJoin.tfidfCosinePairs(docs, col("doc_id"), col("text"),
-          nDocs = n, minCos = 0.5, maxDf = 10)))
-    }
-  }
-
-  /** Decompose q_bloom_join's cost at sf0.1: bitmap build, bloom-filter
-    * scan, pruned semi join, plain semi join. */
-  private def runBloom(spark: SparkSession,
-                       noop: org.apache.spark.sql.DataFrame => Unit): Unit = {
-    import graft.operators.BloomJoin
-    val d = "/root/testdata/sf0.1"
-    val fact = Tables.lineitem(spark, d)
-    val hot = Tables.orders(spark, d).filter(col("o_totalprice") > 450000.0)
-    (1 to 2).foreach { round =>
-      val bits = time(s"buildBits m=2^16 k=4 (r$round)")(
-        BloomJoin.buildBits(hot, col("o_orderkey"), 1 << 16, 4))
-      time(s"bloom filter scan only (r$round)")(
-        noop(fact.filter(
-          BloomJoin.membershipTest(col("l_orderkey"), bits, 1 << 16, 4))))
-      time(s"semiJoinPruned e2e (r$round)")(
-        noop(BloomJoin.semiJoinPruned(fact, col("l_orderkey"),
-          hot, col("o_orderkey"))))
-      time(s"plain left_semi join (r$round)")(
-        noop(fact.join(hot.select(col("o_orderkey")),
-          col("l_orderkey") === col("o_orderkey"), "left_semi")))
-    }
-  }
-
-  private def runAnn(spark: SparkSession,
-                     noop: org.apache.spark.sql.DataFrame => Unit): Unit = {
-    val n = 200000L; val dim = 64; val nClusters = 64
-    // deterministic clustered corpus: center c = 10·e_{c mod dim} + jitter
-    val corpus = spark.range(n).select(col("id").as("vec_id"),
-      transform(sequence(lit(0), lit(dim - 1)), j =>
-        when(j === col("id") % nClusters, lit(10.0)).otherwise(lit(0.0)) +
-          ((col("id") * 31 + j * 7) % 100).cast("double") / 1000.0)
-        .as("embedding"))
-      .localCheckpoint(eager = true) // materialize once; measure operators
-    val dir = java.nio.file.Files.createTempDirectory("graft-scratch-ivf-")
-
-    val cents = time("kmeans k=64 iters=5 (200k x 64)")(
-      Ann.kmeansCentroids(corpus, col("vec_id"), col("embedding"),
-        k = nClusters, iters = 5))
-    val centsLocal = cents.persist()
-    centsLocal.count()
-    val indexed = time("assign cells (map-side)") {
-      val a = Ann.assignCells(corpus, col("vec_id"), col("embedding"),
-        centsLocal)
-      noop(a); a
-    }
-    time("partitioned index write")(
-      Ann.writePartitioned(indexed, s"$dir/ivf"))
-    val idx = spark.read.parquet(s"$dir/ivf")
-
-    val q = Knn.vectorAt(corpus, col("vec_id"), 4242L, col("embedding"))
-    time("brute-force knnExact top-10")(
-      noop(Knn.knnExact(idx, col("embedding"), q, k = 10)))
-    time("ivfTopK nProbe=4 top-10")(
-      noop(Ann.ivfTopK(idx, col("cell"), col("embedding"), centsLocal, q,
-        k = 10, nProbe = 4)))
-
-    // ---- sharded NSW graph (HNSW-class) on the same corpus/query:
-    // build cost vs the IVF train+assign+write above, search vs ivfTopK
-    val graph = time("graph build S=32 m=16 ef=100 (200k)") {
-      val g = graft.operators.GraphAnn.buildGraph(corpus, col("vec_id"),
-        col("embedding"), numShards = 32, m = 16, efConstruction = 100)
-      g.persist().count(); g
-    }
-    time("graphTopK ef=100 top-10")(
-      noop(graft.operators.GraphAnn.graphTopK(graph, q, k = 10, ef = 100)))
-    time("graphTopK ef=100 top-10 (2nd)")(
-      noop(graft.operators.GraphAnn.graphTopK(graph, q, k = 10, ef = 100)))
-
-    val queries = corpus.filter(col("vec_id") % 2000 === 0) // 100 queries
-    time("knnJoin broadcast (100 q)")(
-      noop(Knn.knnJoin(queries, col("vec_id"), col("embedding"),
-        corpus, col("vec_id"), col("embedding"), k = 10)))
-    time("knnJoinIvf nProbe=4 (100 q)")(
-      noop(Knn.knnJoinIvf(queries, col("vec_id"), col("embedding"),
-        idx, col("vec_id"), col("embedding"), centsLocal, k = 10,
-        nProbe = 4)))
-    time("graphKnnJoin ef=100 (100 q)")(
-      noop(graft.operators.GraphAnn.graphKnnJoin(queries, col("vec_id"),
-        col("embedding"), graph, k = 10, ef = 100)))
-    graph.unpersist()
-
-    // ---- PQ at 200k: codebook train, the native-kernel encode pass
-    // (8 subspaces × 16 codes), and an ADC query over codes only
-    import graft.operators.Pq
-    val pqm = time("pq trainCodebooks m=8 ks=16 x3")(
-      Pq.trainCodebooks(corpus, col("vec_id"), col("embedding"), 8, 16, 3))
-    val encoded = time("pq encode 200k x 64 (native kernel)") {
-      val e = Pq.encode(corpus, col("embedding"), pqm)
-        .localCheckpoint(eager = true)
-      e
-    }
-    time("pq ADC top-10 (codes only)")(
-      noop(Pq.pqTopK(encoded, col("codes"), pqm, q, k = 10)))
-    time("pq ADC + exact refine top-10")(
-      noop(Pq.pqTopKRefined(encoded, col("codes"), col("embedding"),
-        pqm, q, k = 10, overfetch = 8)))
-  }
-
-  // ---- Z-order pruning at 2M rows: the same 2-D box filter against a
-  // natural-order layout and a z-ordered layout (16k-row files ⇒
-  // file-granular row groups), measuring rows DECODED by the parquet
-  // scan (row groups surviving min/max pruning) and scan wall time.
-  // Numbers recorded in BASELINE.md.
-  private def runZOrder(spark: SparkSession): Unit = {
-    import graft.operators.ZOrder
-    val dir = java.nio.file.Files.createTempDirectory("graft-scratch-z-")
-    val zn = 2000000L
-    val zdf = spark.range(zn).select(col("id"),
-      pmod(hash(col("id"), lit(1)), lit(1024)).as("x"),
-      pmod(hash(col("id"), lit(2)), lit(1024)).as("y"),
-      md5(col("id").cast("string")).as("payload"))
-    time("plain write 2M (natural order)")(
-      zdf.write.mode("overwrite").option("maxRecordsPerFile", 16384L)
-        .parquet(s"$dir/zplain"))
-    time("z-ordered write 2M (10-bit x,y)")(
-      ZOrder.writeZOrdered(zdf, s"$dir/zord",
-        Seq(col("x"), col("y")), bits = 10, fileRows = 16384))
-    def boxScan(path: String, label: String): Unit = {
-      val df = spark.read.parquet(path)
-        .filter(col("x").between(100, 131) && col("y").between(200, 231))
-      val qe = df.queryExecution
-      val matched = time(s"box scan 32x32 ($label)")(
-        qe.executedPlan.execute().count())
-      val decoded = qe.executedPlan.collectLeaves()
-        .map(_.metrics("numOutputRows").value).sum
-      val ratio = zn.toDouble / math.max(1L, decoded)
-      println(f"[scratch] $label%s: rows decoded = $decoded%d of $zn%d, " +
-        f"matched = $matched%d (pruning ratio $ratio%.1f x)")
-    }
-    boxScan(s"$dir/zplain", "natural order")
-    boxScan(s"$dir/zord", "z-ordered")
-    time("hilbert-ordered write 2M (10-bit x,y)")(
-      ZOrder.writeHilbertOrdered(zdf, s"$dir/hord",
-        col("x"), col("y"), bits = 10, fileRows = 16384))
-    boxScan(s"$dir/hord", "hilbert-ordered")
-  }
-
-  /** 3-D layout comparison (VERDICT r10 item 6): the [[runZOrder]]
-    * box-scan methodology at 3 dims — 2M rows over a 128³ grid (7-bit
-    * buckets ≈ 1 row/cell), 16×16×16 box, natural vs Morton vs the n-D
-    * Skilling Hilbert key. */
-  private def runZOrder3(spark: SparkSession): Unit = {
-    import graft.operators.ZOrder
-    val dir = java.nio.file.Files.createTempDirectory("graft-scratch-z3-")
-    val zn = 2000000L
-    val zdf = spark.range(zn).select(col("id"),
-      pmod(hash(col("id"), lit(1)), lit(128)).as("x"),
-      pmod(hash(col("id"), lit(2)), lit(128)).as("y"),
-      pmod(hash(col("id"), lit(3)), lit(128)).as("z"),
-      md5(col("id").cast("string")).as("payload"))
-    val dims = Seq(col("x"), col("y"), col("z"))
-    time("plain write 2M (natural order)")(
-      zdf.write.mode("overwrite").option("maxRecordsPerFile", 16384L)
-        .parquet(s"$dir/plain"))
-    time("z-ordered write 2M (7-bit x,y,z)")(
-      ZOrder.writeZOrdered(zdf, s"$dir/zord", dims, bits = 7,
-        fileRows = 16384))
-    time("hilbertN write 2M (7-bit x,y,z)")(
-      ZOrder.writeHilbertNOrdered(zdf, s"$dir/hord", dims, bits = 7,
-        fileRows = 16384))
-    def boxScan(path: String, label: String): Unit = {
-      val df = spark.read.parquet(path)
-        .filter(col("x").between(40, 55) && col("y").between(64, 79) &&
-          col("z").between(100, 115))
-      val qe = df.queryExecution
-      val matched = time(s"box scan 16^3 ($label)")(
-        qe.executedPlan.execute().count())
-      val decoded = qe.executedPlan.collectLeaves()
-        .map(_.metrics("numOutputRows").value).sum
-      val ratio = zn.toDouble / math.max(1L, decoded)
-      println(f"[scratch] $label%s: rows decoded = $decoded%d of $zn%d, " +
-        f"matched = $matched%d (pruning ratio $ratio%.1f x)")
-    }
-    boxScan(s"$dir/plain", "natural order")
-    boxScan(s"$dir/zord", "z-ordered 3d")
-    boxScan(s"$dir/hord", "hilbertN 3d")
+    spark.stop()
   }
 }

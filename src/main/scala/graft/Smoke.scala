@@ -1,26 +1,9 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Local smoke of the driver's t1 check: `SparkEntry.entry` rows > 0. */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // local mode has no executor liveness to protect: a host stall or
-      // full-GC pause past the 120 s default makes HeartbeatReceiver
-      // remove the DRIVER executor, which strands every in-flight AQE
-      // stage (observed killing a full test run mid-suite after a 156 s
-      // stall). Generous timeouts are strictly better here.
-      .config("spark.network.timeout", "600s")
-      .config("spark.executor.heartbeatInterval", "60s")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(8)
     val df = SparkEntry.entry(spark)
     df.show(false)
     println(s"[smoke] entry rows = ${df.count()}")

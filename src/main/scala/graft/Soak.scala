@@ -29,9 +29,8 @@ object Soak {
   }
 
   /** The deterministic soak document corpus (hash-mixed ~unique texts,
-    * 15–70 tokens, 5 langs × 10 sources) — shared by the batch soak and
-    * the streaming soak (`Scratch streamsoak`). Everything is arithmetic
-    * in doc_id: no RNG, identical on every run. */
+    * 15–70 tokens, 5 langs × 10 sources). Everything is arithmetic in
+    * doc_id: no RNG, identical on every run. */
   def genDocs(spark: SparkSession, nDocs: Long): DataFrame = {
     val vocab = Seq("batch", "part", "spark", "line", "column", "order",
       "small", "sort", "fast", "value", "scan", "hash", "slow", "group",
@@ -50,19 +49,7 @@ object Soak {
   }
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // local mode has no executor liveness to protect: a host stall or
-      // full-GC pause past the 120 s default makes HeartbeatReceiver
-      // remove the DRIVER executor, which strands every in-flight AQE
-      // stage (observed killing a full test run mid-suite after a 156 s
-      // stall). Generous timeouts are strictly better here.
-      .config("spark.network.timeout", "600s")
-      .config("spark.executor.heartbeatInterval", "60s")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(32)
     def noop(df: DataFrame): Unit =
       df.write.format("noop").mode("overwrite").save()
     def assertPlanSane(name: String, df: DataFrame,

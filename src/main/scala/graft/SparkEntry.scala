@@ -37,4 +37,12 @@ object SparkEntry {
     * the same parquet tables. Omit for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] =
     ParityQueries.oracles ++ ExtensionQueries.oracles
+
+  /** `names`, unchanged, once every one is a `queries` key — a mistyped
+    * name given to a driver main fails instead of selecting nothing. */
+  def checkKeys(names: Seq[String]): Seq[String] = {
+    val unknown = names.filterNot(queries.contains)
+    require(unknown.isEmpty, s"unknown query keys: ${unknown.mkString(", ")}")
+    names
+  }
 }

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -7,30 +6,11 @@ object Verify {
   def main(args: Array[String]): Unit = {
     // args: <sfDir> <outDir> [queryName ...] — names restrict the dump
     // (fast single-query iteration; tools/check.py takes the same names)
+    require(args.length >= 2,
+      "usage: graft.Verify <sfDir> <outDir> [queryName ...]")
     val sfDir = args(0); val outDir = args(1)
-    val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // events.parquet carries TIMESTAMP(NANOS) which vanilla Spark rejects;
-      // read as epoch-nanos LONG (oracle side uses epoch arithmetic too).
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // local mode has no executor liveness to protect: a host stall or
-      // full-GC pause past the 120 s default makes HeartbeatReceiver
-      // remove the DRIVER executor, which strands every in-flight AQE
-      // stage (observed killing a full test run mid-suite after a 156 s
-      // stall). Generous timeouts are strictly better here.
-      .config("spark.network.timeout", "600s")
-      .config("spark.executor.heartbeatInterval", "60s")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // RELIABLE checkpoints for the iterative operators (Dedup
-    // connected-components), cleaned up on exit — see CkptDir
-    CkptDir.init(spark)
+    val only = SparkEntry.checkKeys(args.drop(2).toSeq).toSet
+    val spark = Sessions.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }

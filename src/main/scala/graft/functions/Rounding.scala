@@ -17,7 +17,6 @@ object Rounding {
     floor(c * p + 0.5) / p
   }
   def floorRound6(c: Column): Column = floorRound(c, 6)
-  def floorRound4(c: Column): Column = floorRound(c, 4)
 
   /** DuckDB spelling of [[floorRound]] for oracle SQL. */
   def floorRoundSql(e: String, digits: Int): String = {

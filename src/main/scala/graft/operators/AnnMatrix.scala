@@ -22,8 +22,8 @@ import org.apache.spark.sql.functions._
   * table the round-5 verdict asked for, and AnnMatrixSpec gates every
   * tier's recall on the sf0.1 corpus so a regression in any one fails
   * the build. Wall time is deliberately NOT part of the gates — at test
-  * scale it is job overhead; Scratch's `annmatrix` section records it
-  * at 200k where it means something.
+  * scale it is job overhead; BASELINE.md records it at 200k, where it
+  * means something.
   */
 object AnnMatrix {
 

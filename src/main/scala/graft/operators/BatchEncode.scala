@@ -69,7 +69,7 @@ object BatchEncode {
     * through a frozen random projection, cosine-meaningful like any
     * random-projection sketch — not a stub: the matmul cost scales with
     * batch size exactly the way a model forward pass does, so the
-    * Scratch throughput row (docs/s) exercises the true seam overhead. */
+    * BASELINE.md throughput row (docs/s) exercises the true seam overhead. */
   final class ProjectionEncoder(val dim: Int, vocab: Int = 1 << 12,
                                 seed: Long = 42L) extends Encoder {
     // "model load": one vocab×dim float matrix per executor JVM,

@@ -66,10 +66,6 @@ object Dedup {
         h => (h * (37L * j + 101L) + (1009L * j + 9176L)) % 1000000007L))
     }: _*)
 
-  /** MinHash signature straight from shingles (hashes derived inline). */
-  def minhashSignature(shingles: Column, numHashes: Int = 8): Column =
-    minhashFromHashes(transform(shingles, tokenHash16(_)), numHashes)
-
   /** LSH band keys: `bands` groups of `rowsPerBand` signature slots folded
     * into one BIGINT bucket key (pure arithmetic — no digest; the fold
     * reduces mod 2^31 before each multiply so it never overflows BIGINT,

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** Z-order (Morton) data layout: interleave the bits of several bucketed
@@ -146,40 +146,4 @@ object ZOrder {
       d * 2 + when(element_at(fin, st.getField("_2").cast("int") + 1)
         .bitwiseAND(st.getField("_1")) =!= 0, 1L).otherwise(0L))
   }
-
-  /** Sort by Hilbert index and write — [[writeZOrdered]]'s layout pass
-    * on the better-locality curve (measured comparison in BASELINE:
-    * `runMain graft.Scratch zorder`). */
-  def writeHilbertOrdered(df: DataFrame, dir: String, xCol: Column,
-                          yCol: Column, bits: Int,
-                          fileRows: Int = 1 << 20): Unit =
-    df.withColumn("_h", hilbertValue(xCol, yCol, bits))
-      .orderBy(col("_h"))
-      .drop("_h")
-      .write.mode("overwrite")
-      .option("maxRecordsPerFile", fileRows.toLong)
-      .parquet(dir)
-
-  /** Sort by the n-D Hilbert index and write — [[writeHilbertOrdered]]
-    * for 3+ dims (measured 3-D comparison in BASELINE:
-    * `runMain graft.Scratch zorder3`). */
-  def writeHilbertNOrdered(df: DataFrame, dir: String, dims: Seq[Column],
-                           bits: Int, fileRows: Int = 1 << 20): Unit =
-    df.withColumn("_h", hilbertValueN(dims, bits))
-      .orderBy(col("_h"))
-      .drop("_h")
-      .write.mode("overwrite")
-      .option("maxRecordsPerFile", fileRows.toLong)
-      .parquet(dir)
-
-  /** Sort by z-value and write — the layout pass. `fileRows` bounds rows
-    * per file so min/max pruning has granularity to work with. */
-  def writeZOrdered(df: DataFrame, dir: String, dims: Seq[Column],
-                    bits: Int, fileRows: Int = 1 << 20): Unit =
-    df.withColumn("_z", zValue(dims, bits))
-      .orderBy(col("_z"))
-      .drop("_z")
-      .write.mode("overwrite")
-      .option("maxRecordsPerFile", fileRows.toLong)
-      .parquet(dir)
 }

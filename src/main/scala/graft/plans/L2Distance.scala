@@ -125,8 +125,8 @@ object NativeFunctions {
 /** `spark.sql.extensions=graft.plans.GraftExtensions` registers the native
   * functions for SQL use, e.g. `SELECT l2_native(embedding, query)`,
   * `feature_hash_embed(text, 64)`, `simhash16(text)`,
-  * `hashed_shingles(text, 3, 4, true)`. Wired into the Verify/Bench/Smoke
-  * session builders. */
+  * `hashed_shingles(text, 3, 4, true)`, and injects [[NativeKernelRewrite]].
+  * Every driver session gets it from [[graft.Sessions.local]]. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
   private def intLit(e: Expression, what: String): Int = e match {

@@ -171,9 +171,6 @@ object HrPipeline {
   def flattenEmployeeMetadata(df: DataFrame): DataFrame =
     df.select(employeeMetadataColumns: _*)
 
-  def flattenJobMetadata(df: DataFrame): DataFrame =
-    df.select(jobMetadataColumns: _*)
-
   // ---- collection build (vector_db.py:44-180) -------------------------
 
   /** Deterministic feature-hash embedding: token → bucket (md5-derived,

@@ -1,9 +1,10 @@
 package graft
 
+import org.apache.spark.sql.ExtensionsProbe
 import org.apache.spark.sql.functions._
 
 import graft.functions.VectorFunctions
-import graft.plans.NativeKernelRewrite
+import graft.plans.{GraftExtensions, NativeKernelRewrite}
 
 /** The optimizer-rule rung of the §7.3 ladder: the declarative HOF
   * l2/l2Sq pattern is rewritten to the native codegen'd kernel — plan
@@ -82,11 +83,19 @@ class NativeRewriteSpec extends SparkSuite {
   }
 
   test("production sessions get the rule via GraftExtensions") {
-    // the Verify/Bench/Smoke builders set spark.sql.extensions —
-    // mirror the injection the way L2DistanceSpec mirrors functions:
-    // apply the rule object directly to a plan with the HOF pattern
+    // Sessions.local sets spark.sql.extensions — mirror the injection
+    // the way L2DistanceSpec mirrors functions: apply the rule object
+    // directly to a plan with the HOF pattern
     val plan = vecs.select(VectorFunctions.l2(col("a"), col("b")).as("d"))
       .queryExecution.analyzed
     assert(NativeKernelRewrite(plan).toString.contains("l2_native"))
+  }
+
+  test("GraftExtensions injects the rewrite rule and the native functions") {
+    val (rules, functions) =
+      ExtensionsProbe.inject(new GraftExtensions(), spark)
+    assert(rules.contains(NativeKernelRewrite))
+    assert(Set("l2_native", "feature_hash_embed", "simhash16",
+      "hashed_shingles", "vector_sum").subsetOf(functions))
   }
 }

@@ -5,25 +5,13 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for all suites (one JVM-wide session — sbt runs
   * suites in one forked JVM; `getOrCreate` makes this safe under parallel
-  * suite execution). Config mirrors Verify/Bench so tests see the same
-  * semantics the driver gate sees. */
+  * suite execution). Same config as the driver mains ([[Sessions.builder]])
+  * but WITHOUT `GraftExtensions`: with its rewrite rule active, the
+  * HOF-vs-kernel parity specs (L2DistanceSpec, NativeRewriteSpec) would
+  * compare the kernel with itself. */
 object SparkTestSession {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // local mode has no executor liveness to protect: a host stall or
-      // full-GC pause past the 120 s default makes HeartbeatReceiver
-      // remove the DRIVER executor, which strands every in-flight AQE
-      // stage (observed killing a full test run mid-suite after a 156 s
-      // stall). Generous timeouts are strictly better here.
-      .config("spark.network.timeout", "600s")
-      .config("spark.executor.heartbeatInterval", "60s")
-      .getOrCreate()
+    val s = Sessions.builder(4).appName("graft-test").getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
   }
