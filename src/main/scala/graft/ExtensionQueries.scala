@@ -1356,21 +1356,12 @@ object ExtensionQueries {
     // in floats — the same trick q_winnow_fingerprint uses. Scale shape:
     // tf is one shuffle on (doc, term); df and avgdl are broadcast-size;
     // the doc side joins them without reshuffling.
-    "q_bm25_rank" -> ((s, d) =>
-      bm25Scores(s, d, Seq("join", "filter", "window", "scan"))
-        .orderBy(col("score").desc, col("doc_id").asc)
-        .limit(15)),
+    "q_bm25_rank" -> bm25Top15,
 
-    // ---- top-k BM25 under term-upper-bound pruning (MaxScore /
-    // WAND family — Turtle & Flood 1995, Broder et al. 2003): docs
-    // whose summed per-term score bounds cannot reach the seeded
-    // threshold θ never enter the per-doc scoring regroup. A PHYSICAL
-    // rewrite proven bit-identical: held to q_bm25_rank's EXACT oracle
-    // SQL (the q_bloom_join / q_skew_join / q_host_cap proof family).
-    "q_bm25_maxscore" -> ((s, d) =>
-      graft.operators.Bm25.topKMaxScore(Tables.documents(s, d),
-        col("doc_id"), col("text"),
-        Seq("join", "filter", "window", "scan"), docCount(s, d), 15)),
+    // ---- top-k BM25, the MaxScore key: q_bm25_rank's plan, whose
+    // per-partition TakeOrderedAndProject k-heap is the top-k pruning
+    // (why there is no term-upper-bound ladder: the Bm25 scaladoc).
+    "q_bm25_maxscore" -> bm25Top15,
 
     // ---- BM25 served under MAINTAINED corpus statistics (the
     // bm25Stream merge-on-read state, persisted in the partial-
@@ -4347,6 +4338,13 @@ object ExtensionQueries {
     graft.operators.Bm25.scores(Tables.documents(s, d), col("doc_id"),
       col("text"), kws, docCount(s, d))
 
+  /** Top-15 documents for the keywords join/filter/window/scan, score
+    * descending with a doc_id tiebreak (q_bm25_rank, q_bm25_maxscore). */
+  private def bm25Top15(s: SparkSession, d: String): DataFrame =
+    bm25Scores(s, d, Seq("join", "filter", "window", "scan"))
+      .orderBy(col("score").desc, col("doc_id").asc)
+      .limit(15)
+
   /** Dirichlet-smoothed query-likelihood scores (Zhai & Lafferty 2001)
     * over the documents table — see the q_ql_dirichlet comment for the
     * estimator. Scale shape: tokenization map-side; the per-(doc, term)
@@ -4589,9 +4587,8 @@ object ExtensionQueries {
        |  FROM ts GROUP BY doc_id)""".stripMargin
 
   /** The q_bm25_rank replay, shared verbatim with q_bm25_maxscore
-    * (upper-bound pruning is a physical rewrite — pruned docs provably
-    * cannot enter the top-k) and q_bm25_served (exact maintained
-    * statistics == batch-derived statistics). */
+    * (the same exhaustive top-k plan) and q_bm25_served (exact
+    * maintained statistics == batch-derived statistics). */
   private lazy val bm25Top15OracleSql: String =
     s"""WITH $bm25ScoreCte
        |SELECT doc_id, score FROM r
@@ -7276,9 +7273,7 @@ object ExtensionQueries {
 
     "q_bm25_rank" -> bm25Top15OracleSql,
 
-    // MaxScore pruning is a physical rewrite (term-bound pruned docs
-    // provably cannot enter the top-k) — bit-identical contract, the
-    // q_bloom_join proof pattern
+    // the MaxScore key runs q_bm25_rank's exhaustive top-k plan
     "q_bm25_maxscore" -> bm25Top15OracleSql,
 
     // serving under the persisted EXACT statistics == batch scoring —

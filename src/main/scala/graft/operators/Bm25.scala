@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.functions.Rounding.floorRound6
 import graft.functions.TextFunctions.tokens
@@ -22,21 +23,27 @@ import graft.functions.TextFunctions.tokens
   * and the 1-row avgdl/N stats broadcast; the only corpus shuffle left
   * is the per-doc score regroup over MATCHED docs — linear.
   *
-  * Three entry points:
+  * Two entry points:
   *  - [[scores]]: batch — corpus statistics derived from the scored
-  *    corpus itself (the q_bm25_rank form).
+  *    corpus itself (q_bm25_rank and q_bm25_maxscore: top-k is
+  *    `scores(...).orderBy(score DESC, doc_id).limit(k)`, whose
+  *    TakeOrderedAndProject keeps a k-heap per partition).
   *  - [[scoresWith]]: serving — candidates scored under EXTERNALLY
   *    maintained corpus statistics (df table + 1-row avgdl/N), the
   *    [[graft.streaming.Streams.bm25Stream]] merge-on-read output.
   *    At 100 TB the statistics are index metadata maintained
   *    incrementally; a query never re-aggregates the corpus.
-  *  - [[topKMaxScore]]: top-k under term-upper-bound pruning (the
-  *    MaxScore family — Turtle & Flood 1995; doc upper bounds as in
-  *    Broder et al. WAND 2003) — a PHYSICAL rewrite proven
-  *    bit-identical to the exhaustive top-k, the q_bloom_join /
-  *    q_skew_join proof pattern.
+  *
+  * No term-upper-bound (MaxScore/WAND) pruning: the exact score is one
+  * per-doc fold over keyword-sized rows, and every bound stage (term
+  * bounds, seed fold, θ, survivor fold) is a job that costs more than
+  * the fold it saves — measured 19 vs 9 jobs and 3.5× the warm wall on
+  * 500 docs (1.63 vs 0.46 s, 4 vCPU).
   */
 object Bm25 {
+
+  /** The separator class of [[tokens]]' `\s+` split (Java regex). */
+  private val Whitespace = java.util.regex.Pattern.compile("\\s")
 
   /** Per-(doc, term) exact BM25 contribution given joined tf/df/dl and
     * the broadcast 1-row stats (avgdl DOUBLE, nd DOUBLE). */
@@ -51,7 +58,7 @@ object Bm25 {
   }
 
   /** tf ⋈ bc(df) ⋈ dl × bc(stats) → per-(doc, term) contribution
-    * `ts`. Shared by the scoring regroup and the upper-bound pass. */
+    * `ts`. */
   private def contributions(tf: DataFrame, dfreq: DataFrame,
                             dls: DataFrame, stats: DataFrame): DataFrame =
     tf.join(broadcast(dfreq), "term").join(dls, "doc_id")
@@ -93,11 +100,22 @@ object Bm25 {
     * identical to the tf subtree, so one Exchange serves both
     * (ReusedExchange — the former shape's filter pushdown split the
     * trees and re-tokenized the corpus per consumer, a measured 36-scan
-    * plan for MaxScore: plans/r16/q_bm25_maxscore_before.txt). */
+    * plan: plans/r16/q_bm25_maxscore_before.txt).
+    *
+    * Every keyword must be a token [[tokens]] can emit — non-empty, no
+    * `\s` character, already lowercase — or it would silently score
+    * nothing; such keywords fail here, listed by name. */
   private def kwTf(docs: DataFrame, idCol: Column, textCol: Column,
-                   kws: Seq[String]): DataFrame =
+                   kws: Seq[String]): DataFrame = {
+    val unmatchable = kws.filter(k => k.isEmpty ||
+      Whitespace.matcher(k).find() ||
+      UTF8String.fromString(k).toLowerCase.toString != k)
+    require(unmatchable.isEmpty, "BM25 keywords must be lowercase " +
+      "single tokens; these can never match a token: " +
+      unmatchable.map(k => s"\"$k\"").mkString(", "))
     termsOf(docs, idCol, textCol).filter(col("term").isin(kws: _*))
       .groupBy(col("doc_id"), col("term")).agg(count(lit(1)).as("tf"))
+  }
 
   /** Batch BM25: corpus statistics derived from `docs` itself. Emits
     * one `(doc_id, score)` row per doc matching ≥ 1 keyword. */
@@ -162,79 +180,5 @@ object Bm25 {
       .select(lit("").as("term"), lit(0L).as("_df"), col("_dl"),
         col("_n"))
     dfp.unionByName(scal)
-  }
-
-  /** Top-k BM25 under term-upper-bound pruning (MaxScore / WAND
-    * family). Exhaustive scoring pays the per-doc regroup fold for
-    * EVERY matching doc; this prunes docs that provably cannot enter
-    * the top-k before that regroup:
-    *
-    *  1. UB(t) = max over the corpus of t's exact contribution — at
-    *     100 TB this is INDEX metadata stored beside the postings at
-    *     build time (here derived in-query from the same keyword-sized
-    *     contribution frame; ≤ |q| rows, broadcast).
-    *  2. ub_doc = Σ UB(t) over the doc's matched terms ≥ the doc's
-    *     true score (each contribution is ≤ its term max).
-    *  3. Seed θ: exactly score the k docs with the LARGEST ub_doc
-    *     (deterministic tiebreak); θ = the smallest of those k exact
-    *     scores. Any doc with ub_doc < θ has score ≤ ub_doc < θ while
-    *     ≥ k docs score ≥ θ — it can never displace the top-k.
-    *  4. Exactly score only the survivors (ub_doc ≥ θ) and take the
-    *     top-k.
-    *
-    * The pruned set never reaches the scoring regroup, so the fold
-    * shuffle carries the survivor fraction only. Bit-identical to
-    * `scores(...).orderBy(score DESC, doc_id).limit(k)` by
-    * construction — held to the SAME oracle SQL as q_bm25_rank (the
-    * physical-rewrite proof family: q_bloom_join, q_skew_join,
-    * q_host_cap). θ stays a lazy 1-row broadcast (the avgdl shape):
-    * an empty match set yields NULL θ, the filter drops all rows and
-    * the output is empty — exactly the exhaustive result. */
-  def topKMaxScore(docs: DataFrame, idCol: Column, textCol: Column,
-                   kws: Seq[String], nDocs: Long, k: Int): DataFrame =
-    maxScoreParts(docs, idCol, textCol, kws, nDocs, k)._3
-
-  /** [[topKMaxScore]] with its pruning frames exposed for the spec
-    * gate: (per-matched-doc upper bounds, survivor ids, top-k). */
-  private[graft] def maxScoreParts(docs: DataFrame, idCol: Column,
-                                   textCol: Column, kws: Seq[String],
-                                   nDocs: Long, k: Int)
-      : (DataFrame, DataFrame, DataFrame) = {
-    // dl map-side from the token array ([[docLens]] — the former
-    // occurrence groupBy paid a full corpus exchange), tf/df one
-    // keyword-filtered count shuffle sharing one Exchange ([[kwTf]]).
-    // The contribution tree below is referenced THREE times (upper
-    // bounds, the theta seed fold, the survivor fold); its copies are
-    // now identical subtrees over the same tiny exchange, so
-    // ReusedExchange collapses them where the former per-consumer
-    // re-derivation produced a measured 36-scan plan
-    // (plans/r16/q_bm25_maxscore_before.txt).
-    val dls = docLens(docs, idCol, textCol)
-    val stats = dls.agg(
-        (sum(col("dl")).cast("double") / count(lit(1))).as("avgdl"))
-      .withColumn("nd", lit(nDocs.toDouble))
-    val tf = kwTf(docs, idCol, textCol, kws)
-    val dfreq = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
-    val contrib = contributions(tf, dfreq, dls, stats)
-
-    // per-term upper bounds (≤ |q| rows) and per-doc bound sums — the
-    // candidate-generation pass touches only the keyword-sized tf
-    // frame, never the doc-length join or the scoring regroup
-    val ub = contrib.groupBy(col("term")).agg(max(col("ts")).as("ub"))
-    val ubDoc = tf.join(broadcast(ub), "term")
-      .groupBy(col("doc_id")).agg(sum(col("ub")).as("ub_doc"))
-    val seeds = ubDoc
-      .orderBy(col("ub_doc").desc, col("doc_id").asc).limit(k)
-      .select(col("doc_id"))
-    val theta = foldScores(
-        contrib.join(broadcast(seeds), Seq("doc_id"), "left_semi"))
-      .agg(min(col("score")).as("theta"))
-    val survivors = ubDoc.crossJoin(broadcast(theta))
-      .filter(col("ub_doc") >= col("theta"))
-      .select(col("doc_id"))
-    val topk = foldScores(
-        contrib.join(broadcast(survivors), Seq("doc_id"), "left_semi"))
-      .orderBy(col("score").desc, col("doc_id").asc).limit(k)
-    (ubDoc, survivors, topk)
   }
 }

@@ -594,10 +594,10 @@ object Dedup {
     * [[containmentOversizedShingles]] — a pair sharing ONLY valved
     * shingles is missed by construction, the documented trade).
     *
-    * Candidates are COUNT-BOUND PRUNED before the exact fetch (the
-    * q_bm25_maxscore physical-rewrite pattern, identical output): the
-    * pair groupBy's multiplicity IS the pair's shared-unvalved-shingle
-    * count, and true |A∩B| ≤ that count + min(valved-shingle counts of
+    * Candidates are COUNT-BOUND PRUNED before the exact fetch (a
+    * physical rewrite with identical output, the q_bloom_join
+    * pattern): the pair groupBy's multiplicity IS the pair's
+    * shared-unvalved-shingle count, and true |A∩B| ≤ that count + min(valved-shingle counts of
     * the two docs), so any pair whose bound falls below
     * threshold·min(|A|,|B|) cannot pass the final filter (floorRound6
     * only rounds DOWN) and is dropped without fetching its sets —

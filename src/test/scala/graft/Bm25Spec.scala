@@ -4,21 +4,17 @@ import org.apache.spark.sql.functions._
 
 import graft.operators.Bm25
 
-/** BM25 operator gates: the MaxScore rewrite's bit-equality AND its
-  * actual pruning (a rewrite that never prunes is vacuous), serving
-  * under maintained statistics == batch, and the additivity the
-  * bm25Stream lifecycle rests on. */
+/** BM25 operator gates: serving under maintained statistics == batch,
+  * the additivity the bm25Stream lifecycle rests on, the empty top-k of
+  * a query nothing matches, and the rejection of keywords no token can
+  * equal. */
 class Bm25Spec extends SparkSuite {
   import spark.implicits._
 
   private val kws = Seq("alpha", "beta", "gamma")
 
   /** Skewed fixture: a few docs stuffed with query terms, a long tail
-    * of single-hit docs — the distribution upper-bound pruning exists
-    * for (tail docs' bound sums sit far below the top scores). The
-    * head count EXCEEDS k so the θ seeds are all multi-term docs and
-    * θ clears every single-term tail bound; with fewer heads than k a
-    * tail doc seeds θ and nothing prunes (correct, just vacuous). */
+    * of single-hit docs ("beta" and "gamma" live in the heads only). */
   private def skewed = {
     val heads = (0L until 6L).map(i =>
       (i, ("alpha beta gamma " * 6) + "filler"))
@@ -41,44 +37,32 @@ class Bm25Spec extends SparkSuite {
     (dfreq, stats)
   }
 
-  test("topKMaxScore equals exhaustive top-k AND prunes the tail") {
+  test("no-match query yields the (empty) exhaustive top-k result") {
     val docs = skewed
-    val n = docs.count()
-    val k = 5
-    val exhaustive = Bm25.scores(docs, col("doc_id"), col("text"), kws, n)
-      .orderBy(col("score").desc, col("doc_id").asc).limit(k)
-      .as[(Long, Double)].collect().toSeq
-    val (ubDoc, survivors, topk) =
-      Bm25.maxScoreParts(docs, col("doc_id"), col("text"), kws, n, k)
-    assert(topk.as[(Long, Double)].collect().toSeq === exhaustive,
-      "upper-bound pruning must be a pure physical rewrite")
-    val matched = ubDoc.count()
-    val kept = survivors.count()
-    assert(kept < matched,
-      s"pruning must actually drop docs on the skewed fixture " +
-        s"(kept $kept of $matched)")
-    assert(kept >= k.toLong, "at least the seeded k docs survive")
-  }
-
-  test("topKMaxScore: no-match query yields the (empty) exhaustive " +
-      "result, not an NPE on the θ scalar") {
-    val docs = skewed
-    val out = Bm25.topKMaxScore(docs, col("doc_id"), col("text"),
-      Seq("zzz_absent"), docs.count(), 5)
+    val out = Bm25.scores(docs, col("doc_id"), col("text"),
+        Seq("zzz_absent"), docs.count())
+      .orderBy(col("score").desc, col("doc_id").asc).limit(5)
     assert(out.count() === 0L)
   }
 
-  test("topKMaxScore with k >= matched docs degenerates to the full " +
-      "exhaustive ranking") {
+  test("keywords no token can equal are rejected by name") {
+    // tokens() lowercases and splits on \s+, so an uppercase, a
+    // multi-word or an empty keyword would silently score nothing
     val docs = skewed
-    val n = docs.count()
-    val all = Bm25.scores(docs, col("doc_id"), col("text"), kws, n)
-      .orderBy(col("score").desc, col("doc_id").asc)
-      .as[(Long, Double)].collect().toSeq
-    val viaMax = Bm25.topKMaxScore(docs, col("doc_id"), col("text"),
-        kws, n, all.size + 10)
-      .as[(Long, Double)].collect().toSeq
-    assert(viaMax === all)
+    val (dfreq, stats) = statsFrames(
+      Bm25.statsPartial(docs, col("doc_id"), col("text")))
+    for (bad <- Seq("Join", "alpha beta", "")) {
+      val batch = intercept[IllegalArgumentException] {
+        Bm25.scores(docs, col("doc_id"), col("text"), Seq("alpha", bad), 64L)
+      }
+      assert(batch.getMessage.contains(s"\"$bad\""), batch.getMessage)
+      assert(!batch.getMessage.contains("\"alpha\""), batch.getMessage)
+      val served = intercept[IllegalArgumentException] {
+        Bm25.scoresWith(docs, col("doc_id"), col("text"), Seq(bad),
+          dfreq, stats)
+      }
+      assert(served.getMessage.contains(s"\"$bad\""), served.getMessage)
+    }
   }
 
   test("scoresWith under statsPartial-derived statistics equals batch " +

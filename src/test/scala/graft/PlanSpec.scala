@@ -470,6 +470,17 @@ class PlanSpec extends SparkSuite {
     assert(!p.contains("Exchange SinglePartition"), p)
   }
 
+  test("q_bm25_maxscore plans no more exchanges than q_bm25_rank") {
+    // both are the exhaustive top-k; a bound-pruning ladder (term upper
+    // bounds, a θ seed fold, a survivor fold) would add shuffle and
+    // broadcast exchanges for stages that cost more than they save
+    def exchanges(key: String): Int = """\b(?:Broadcast)?Exchange\b""".r
+      .findAllIn(plan(SparkEntry.queries(key)(spark, dir))).size
+    val rank = exchanges("q_bm25_rank")
+    assert(rank > 0)
+    assert(exchanges("q_bm25_maxscore") <= rank)
+  }
+
   test("no declared query plans a cartesian product (BNLJ only where documented)") {
     // the sanctioned BroadcastNestedLoopJoins: q_knn_join's documented
     // broadcast-corpus crossJoin (its scale path is q_knn_join_ivf),
@@ -495,7 +506,7 @@ class PlanSpec extends SparkSuite {
     // same scalar-subquery shape as bm25's avgdl)
     val allowedBnlj = Set("q_knn_join", "q_hard_negatives",
       "q_hard_negatives_cos", "q_sketch_kmv_setops", "q_bm25_rank",
-      // bm25's 1-row avgdl/N broadcast; maxscore adds the 1-row θ
+      // bm25's 1-row avgdl/N broadcast (maxscore runs rank's plan)
       "q_bm25_maxscore", "q_bm25_served",
       "q_community_terms", // 1-row community-count broadcast, same shape
       "q_rrf_fusion", "q_mmr_join", "q_decayed_count", "q_query_expand",
